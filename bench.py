@@ -177,12 +177,15 @@ def _prestage(spark, sf_dir: str) -> None:
 
     from dataengineerchallenge_spark.queries.vectors import _PQ_PROD_K
 
+    def _staged_trained_ivfpq_index_prod_k(s, d):
+        return _staged_trained_ivfpq_index(s, d, _PQ_PROD_K)
+
     for stage in (
         _staged_ivfpq_index,
         _staged_ivfpq_residual_index,
         _staged_ivfpq_vectors,
         _staged_trained_ivfpq_index,
-        lambda s, d: _staged_trained_ivfpq_index(s, d, _PQ_PROD_K),
+        _staged_trained_ivfpq_index_prod_k,
         _staged_trained_ivfpq_vectors,
         _staged_fresh_query_batch,
         _staged_minhash_bands,
@@ -193,8 +196,9 @@ def _prestage(spark, sf_dir: str) -> None:
     ):
         try:
             stage(spark, sf_dir)
-        except Exception:  # noqa: BLE001 — the timed loop will record it
-            pass
+        except Exception as exc:  # noqa: BLE001 — keep staging the rest
+            # stderr only: stdout carries the one JSON result line
+            print(f"prestage {stage.__name__} failed: {exc!r}", file=sys.stderr)
 
 
 def main() -> None:

@@ -76,8 +76,8 @@ def udf_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT user_id,
            CAST(count(*) AS BIGINT) AS n,
-           round(coalesce(regr_slope(value, xc), 0.0) * 3600.0, 4) AS slope_per_hour,
-           round(coalesce(regr_intercept(value, xc), avg(value)), 4) AS intercept
+           round(coalesce(regr_slope(value, xc), 0.0) * 3600.0, 4) + 0.0 AS slope_per_hour,
+           round(coalesce(regr_intercept(value, xc), avg(value)), 4) + 0.0 AS intercept
     FROM pts
     GROUP BY user_id
     """,
@@ -85,7 +85,9 @@ def udf_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
 def udf_user_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D3: applyInPandas per-user OLS trend of event value over time
     (x centered per group for conditioning; slope scaled to per-hour so
-    ROUND(4) is far from the float boundary)."""
+    ROUND(4) is far from the float boundary). Spark's ROUND goes
+    through BigDecimal, so a tiny negative fit rounds to 0.0; DuckDB's
+    keeps the sign (-0.0), so the oracle adds 0.0 after its ROUND."""
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", F.unix_timestamp("ts").alias("ts_s"), "value"
     )

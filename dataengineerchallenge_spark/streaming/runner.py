@@ -1,23 +1,91 @@
-"""Stream execution helper (SURVEY.md §2.9 T6 — output modes/triggers).
+"""Stream execution helpers (SURVEY.md §2.9 T6 — output modes/triggers).
 
 ``run_to_batch`` drives a streaming DataFrame to completion over the
 currently-available input with ``trigger(availableNow=True)`` and a
-memory sink, returning the materialized result as a batch DataFrame.
+memory sink, returning the materialized result as a batch DataFrame;
+``drain_foreach_batch`` does the same for a foreachBatch body. Every
+engine stream starts through one of the two.
 
 This is the test/oracle harness path: results are deterministic because
 availableNow drains the full fixture. The memory sink collects to the
 driver, so it is test-scale only — the production sink is
 ``writeStream.format("parquet"/"kafka")`` with the same trigger options
 (S4; sinks module).
+
+Checkpoint manager: a drain whose checkpoint is local runs under
+Spark's ``FileSystemBasedCheckpointFileManager``. Spark's default, the
+FileContext-based manager, needs Hadoop's native library for its local
+renames and permission changes; without it (the usual pip install)
+every offset-log, commit-log and state-store file write forks a
+``readlink`` or ``chmod`` shell. The FileSystem-based manager renames
+through ``File.renameTo``, which is POSIX ``rename(2)`` and as atomic.
+A non-local checkpoint keeps Spark's default manager. The key is set
+around each drain at run time, so a session the engine did not build
+gets it too.
 """
 
 from __future__ import annotations
 
 import itertools
+from contextlib import contextmanager
+from urllib.parse import urlparse
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 _counter = itertools.count()
+
+CHECKPOINT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def checkpoint_confs(checkpoint: str | None, default_fs: str = "file:///") -> dict[str, str]:
+    """Session confs for a drain checkpointing to ``checkpoint``: the
+    FileSystem-based manager when the location is local, none otherwise.
+    A scheme-less location, and the temp dir Spark picks for ``None``,
+    live on ``default_fs``."""
+    scheme = urlparse(checkpoint or "").scheme or urlparse(default_fs).scheme
+    return {CHECKPOINT_MANAGER_KEY: FS_CHECKPOINT_MANAGER} if scheme in ("", "file") else {}
+
+
+@contextmanager
+def session_confs(spark: SparkSession, confs: dict[str, str]):
+    """Set ``confs`` on the session for the block and restore each key on
+    every exit path; a key that was unset before is unset again."""
+    old = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def _drain_confs(spark: SparkSession, checkpoint: str | None) -> dict[str, str]:
+    """``checkpoint_confs`` for the location Spark will actually use."""
+    if checkpoint is None:
+        checkpoint = spark.conf.get("spark.sql.streaming.checkpointLocation", None)
+    default_fs = spark.sparkContext._jsc.hadoopConfiguration().get("fs.defaultFS", "file:///")
+    return checkpoint_confs(checkpoint, default_fs)
+
+
+def _await_drain(q, name: str, timeout_s: int) -> None:
+    """Wait for an availableNow query to finish; always stop it."""
+    try:
+        if not q.awaitTermination(timeout_s):
+            raise TimeoutError(
+                f"streaming query {name!r} did not drain availableNow input in "
+                f"{timeout_s}s — refusing to return a partially-filled sink"
+            )
+    finally:
+        if q.isActive:
+            q.stop()
 
 
 def run_to_batch(
@@ -35,35 +103,18 @@ def run_to_batch(
     Pass ``checkpoint`` to persist offsets/state/watermark across calls:
     a second run with the same checkpoint resumes exactly where the first
     stopped (used by tests to replay a stream batch-by-batch and to
-    verify watermark semantics across restarts)."""
+    verify watermark semantics across restarts).
+
+    The drain plans at ``spark.graft.stream.drainStatePartitions`` shuffle
+    partitions (default 8; non-positive keeps the session width), which a
+    stateful stream keeps as its state width: OPTIMIZATION_r20.md,
+    Change 14."""
     spark = sdf.sparkSession
     qname = f"_strm_{name}_{next(_counter)}_{id(sdf) & 0xFFFF}"
-    # r20 session 5: a stateful drain fixes its STATE partition count
-    # from spark.sql.shuffle.partitions at first-batch planning (and
-    # records it in the offset log), so every drain through this harness
-    # scheduled 32 state-store tasks whose cost is per-task open/commit
-    # I/O, not compute — profiled at sf0.1: 21 s of task time at 0.79 s
-    # CPU for stream_per_minute_load's stateful stage; narrowing to 8
-    # measured the whole drain 2.1-4.1 s -> 1.2-1.5 s (alternating
-    # samples). This harness is the TEST/ORACLE path by contract (the
-    # memory sink collects to the driver, so drains here are
-    # driver-bounded by design — its own docstring); the production
-    # parquet/kafka sink path does not go through it. Dial:
-    # spark.graft.stream.drainStatePartitions (default 8; set 0/unset
-    # semantics: any non-positive value disables the override). The
-    # session width is restored after termination — state partitioning
-    # for batches beyond the first comes from the offset log, never the
-    # live conf. Partitioning cannot change any drained VALUE (exact
-    # aggregates; the oracle sweeps re-verify every streaming twin).
-    drain_sp = int(
-        spark.conf.get("spark.graft.stream.drainStatePartitions", "8")
-    )
-    old_sp: str | None = None
-    if drain_sp > 0:
-        cur_sp = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        if drain_sp < cur_sp:
-            old_sp = str(cur_sp)
-            spark.conf.set("spark.sql.shuffle.partitions", str(drain_sp))
+    confs = _drain_confs(spark, checkpoint)
+    drain_sp = int(spark.conf.get("spark.graft.stream.drainStatePartitions", "8"))
+    if 0 < drain_sp < int(spark.conf.get("spark.sql.shuffle.partitions")):
+        confs["spark.sql.shuffle.partitions"] = str(drain_sp)
     writer = (
         sdf.writeStream.format("memory")
         .queryName(qname)
@@ -72,21 +123,8 @@ def run_to_batch(
     )
     if checkpoint:
         writer = writer.option("checkpointLocation", checkpoint)
-    try:
-        q = writer.start()
-        try:
-            finished = q.awaitTermination(timeout_s)
-            if not finished:
-                raise TimeoutError(
-                    f"streaming query {name!r} did not drain availableNow input in "
-                    f"{timeout_s}s — refusing to return a partially-filled sink"
-                )
-        finally:
-            if q.isActive:
-                q.stop()
-    finally:
-        if old_sp is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old_sp)
+    with session_confs(spark, confs):
+        _await_drain(writer.start(), name, timeout_s)
     # Resolve the sink into a DataFrame, then drop the uniquely-named temp
     # view: spark.table() analyzes EAGERLY, so the returned frame holds the
     # memory-sink relation directly and survives the drop, while the
@@ -107,52 +145,14 @@ def drain_foreach_batch(
     timeout_s: int = 300,
 ) -> None:
     """Drain an availableNow foreachBatch stream to completion — the
-    shared start/await/stop lifecycle of the ~21 foreachBatch twins,
-    under the same narrowed drain width as ``run_to_batch`` (r21 change
-    3; the r20 Change-14 dial applied through one helper instead of 21
-    hand-rolled writeStream blocks).
+    shared start/await/stop lifecycle of the ~21 foreachBatch twins.
 
-    The session shuffle width is narrowed to
-    ``spark.graft.stream.drainStatePartitions`` (default 8; any
-    non-positive value disables) around the drain and restored after
-    termination: the stream's own state layout AND each micro-batch's
-    foreachBatch body (a batch query planned under the live conf) then
-    schedule drain-width tasks instead of the full
-    ``spark.sql.shuffle.partitions``. These drains run per-epoch
-    idempotent batch writes through the driver by contract (the
-    run-scoped store commit); the production parquet/kafka sink path
-    does not go through this helper, and a cluster drain raises the
-    dial. Partitioning cannot change any drained VALUE (exact
-    aggregates, epoch-keyed overwrites; the oracle sweeps re-verify
-    every twin).
-
-    Raises TimeoutError on a partial drain; always stops the query and
-    restores the width."""
+    Raises TimeoutError on a partial drain; always stops the query."""
     spark = sdf.sparkSession
-    drain_sp = int(
-        spark.conf.get("spark.graft.stream.drainStatePartitions", "8")
+    writer = (
+        sdf.writeStream.foreachBatch(batch_fn)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
     )
-    old_sp: str | None = None
-    if drain_sp > 0:
-        cur_sp = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        if drain_sp < cur_sp:
-            old_sp = str(cur_sp)
-            spark.conf.set("spark.sql.shuffle.partitions", str(drain_sp))
-    try:
-        q = (
-            sdf.writeStream.foreachBatch(batch_fn)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not q.awaitTermination(timeout_s):
-                raise TimeoutError(
-                    f"{name} did not drain availableNow input in {timeout_s}s"
-                )
-        finally:
-            if q.isActive:
-                q.stop()
-    finally:
-        if old_sp is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old_sp)
+    with session_confs(spark, _drain_confs(spark, checkpoint)):
+        _await_drain(writer.start(), name, timeout_s)

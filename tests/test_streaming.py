@@ -5,6 +5,7 @@ semantics under multi-batch replay."""
 from __future__ import annotations
 
 import os
+import time
 from datetime import datetime
 
 import pyspark.sql.functions as F
@@ -13,7 +14,7 @@ import pytest
 from dataengineerchallenge_spark.operators.sessionize import session_stats
 from dataengineerchallenge_spark.registry import queries
 from dataengineerchallenge_spark.sources import load_table
-from dataengineerchallenge_spark.streaming import run_to_batch
+from dataengineerchallenge_spark.streaming import run_to_batch, runner
 from dataengineerchallenge_spark.streaming.windows import per_minute_load_stream
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -225,3 +226,103 @@ def test_foreachbatch_cdc_upsert_converges_to_batch_profile(spark, tmp_path):
         .collect()
     }
     assert got == want
+
+
+# --- drain conf scope (streaming/runner.py) ---------------------------------
+
+_SP = "spark.sql.shuffle.partitions"
+
+
+def _tiny_stream(spark, tmp_path):
+    d = str(tmp_path / "tiny_in")
+    spark.createDataFrame(
+        [(i, f"k{i % 3}") for i in range(12)], "id long, k string"
+    ).coalesce(1).write.mode("overwrite").parquet(d)
+    return spark.readStream.schema("id long, k string").parquet(d)
+
+
+def _conf_state(spark):
+    return {k: spark.conf.getAll.get(k) for k in (_SP, runner.CHECKPOINT_MANAGER_KEY)}
+
+
+@pytest.fixture
+def wide_session(spark):
+    """The session at a width above the drain dial (so run_to_batch
+    narrows it), with the checkpoint-manager key unset."""
+    old = spark.conf.get(_SP)
+    spark.conf.set(_SP, "16")
+    assert runner.CHECKPOINT_MANAGER_KEY not in spark.conf.getAll
+    try:
+        yield spark
+    finally:
+        spark.conf.set(_SP, old)
+
+
+def test_foreach_batch_body_sees_fs_checkpoint_manager(wide_session, tmp_path):
+    """A foreachBatch drain into a local checkpoint runs under the
+    FileSystem-based checkpoint manager, and its body plans at the full
+    session width (only run_to_batch narrows)."""
+    spark = wide_session
+    seen = []
+
+    def body(mb, _epoch):
+        conf = mb.sparkSession.conf
+        seen.append((conf.get(runner.CHECKPOINT_MANAGER_KEY, None), conf.get(_SP)))
+
+    runner.drain_foreach_batch(_tiny_stream(spark, tmp_path), body, str(tmp_path / "ckpt"), "fb")
+    assert seen and set(seen) == {(runner.FS_CHECKPOINT_MANAGER, "16")}
+
+
+def test_drain_conf_scope_restores_on_every_exit(wide_session, tmp_path):
+    """Both keys read their pre-drain state after a successful drain, a
+    raising batch body and a timeout; the unset key stays unset."""
+    from pyspark.errors import StreamingQueryException
+
+    spark = wide_session
+    before = _conf_state(spark)
+    assert before == {_SP: "16", runner.CHECKPOINT_MANAGER_KEY: None}
+
+    out = runner.run_to_batch(
+        _tiny_stream(spark, tmp_path).groupBy("k").count(), "scope_ok",
+        output_mode="complete", checkpoint=str(tmp_path / "ckpt_ok"),
+    )
+    assert sorted(map(tuple, out.collect())) == [("k0", 4), ("k1", 4), ("k2", 4)]
+    assert _conf_state(spark) == before
+
+    def boom(_mb, _epoch):
+        raise ValueError("batch body failed")
+
+    with pytest.raises(StreamingQueryException):
+        runner.drain_foreach_batch(_tiny_stream(spark, tmp_path), boom, str(tmp_path / "ckpt_err"), "boom")
+    assert _conf_state(spark) == before
+
+    def slow(_mb, _epoch):
+        time.sleep(3)
+
+    with pytest.raises(TimeoutError):
+        runner.drain_foreach_batch(
+            _tiny_stream(spark, tmp_path), slow, str(tmp_path / "ckpt_slow"), "slow", timeout_s=1
+        )
+    assert _conf_state(spark) == before
+    assert not spark.streams.active
+
+
+@pytest.mark.parametrize(
+    "checkpoint, default_fs, local",
+    [
+        (None, "file:///", True),
+        ("/tmp/ckpt", "file:///", True),
+        ("file:///tmp/ckpt", "hdfs://nn:8020", True),
+        ("hdfs://nn:8020/ckpt", "file:///", False),
+        ("s3a://bucket/ckpt", "file:///", False),
+        ("/tmp/ckpt", "hdfs://nn:8020", False),
+        (None, "hdfs://nn:8020", False),
+    ],
+)
+def test_checkpoint_manager_scoped_to_local_checkpoints(checkpoint, default_fs, local):
+    """Only a local checkpoint gets the FileSystem-based manager; any
+    other keeps Spark's default (no key set). A scheme-less location
+    lives on the default file system."""
+    confs = runner.checkpoint_confs(checkpoint, default_fs)
+    want = {runner.CHECKPOINT_MANAGER_KEY: runner.FS_CHECKPOINT_MANAGER} if local else {}
+    assert confs == want

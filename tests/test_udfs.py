@@ -91,3 +91,55 @@ def test_enrich_propagates_nulls(spark):
     assert out["1"]["value_bucket"] == 1 and out["1"]["dow"] is not None
     assert out["2"]["value_bucket"] is None and out["2"]["log1p_value"] is None
     assert out["3"]["dow"] is None
+
+
+def test_user_trend_zero_fits_are_positive_zero_in_query_and_oracle(spark, qs, tmp_path):
+    """A tiny negative slope or intercept rounds to zero. The query and
+    its DuckDB oracle must both return 0.0, not -0.0: the two render
+    differently in the oracle check. copysign sees the sign bit that
+    ``== 0.0`` cannot, so an optimizer folding the oracle's ``+ 0.0``
+    away would fail here."""
+    from datetime import datetime, timedelta
+
+    import duckdb
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dataengineerchallenge_spark.functions.udfs import fit_user_trend
+    from dataengineerchallenge_spark.registry import oracle_sql
+
+    t0 = datetime(2024, 1, 1, 10, 0, 0)
+    rows = [  # (user_id, seconds after t0, value)
+        (1, 0, 1.0), (1, 3600, 1.0 - 1e-9),      # slope -1e-9 per hour
+        (2, 0, -1e-9), (2, 3600, -1e-9),         # intercept -1e-9
+        (3, 0, 1.0), (3, 3600, 2.0),             # an ordinary fit
+    ]
+    pq.write_table(pa.table({
+        "event_id": pa.array(range(len(rows)), pa.int64()),
+        "ts": pa.array([t0 + timedelta(seconds=s) for _, s, _ in rows], pa.timestamp("us")),
+        "user_id": pa.array([u for u, _, _ in rows], pa.int64()),
+        "event_type": pa.array(["view"] * len(rows)),
+        "value": pa.array([v for _, _, v in rows], pa.float64()),
+        "props": pa.array(["{}"] * len(rows)),
+    }), tmp_path / "events.parquet")
+
+    def fit(u):
+        pts = [(s, v) for uu, s, v in rows if uu == u]
+        return fit_user_trend(pd.DataFrame({
+            "user_id": [u] * len(pts), "ts_s": [s for s, _ in pts], "value": [v for _, v in pts],
+        })).iloc[0]
+
+    assert -1e-4 < fit(1)["slope_per_hour"] < 0.0
+    assert -1e-4 < fit(2)["intercept"] < 0.0
+
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW events AS SELECT * FROM '{tmp_path}/events.parquet'")
+    oracle = con.sql(oracle_sql()["udf_user_trend"]).fetchall()
+    spark_rows = qs["udf_user_trend"](spark, str(tmp_path)).collect()
+    for side, got in (("spark", [tuple(r) for r in spark_rows]), ("duckdb", oracle)):
+        by_user = {u: (slope, icpt) for u, _n, slope, icpt in got}
+        assert set(by_user) == {"1", "2", "3"}, side
+        assert by_user["3"] == (1.0, 1.0), side
+        for u, vals in by_user.items():
+            assert all(math.copysign(1.0, v) == 1.0 for v in vals), (side, u, vals)
