@@ -5,11 +5,16 @@ over the fixture views (`python -m dataengineerchallenge_spark ...`).
     list                       all registered queries (o = DuckDB-oracled)
     run NAME [options]         run one query
     sql "SELECT ..." [options] ad-hoc ANSI SQL over the registered views
-    explain NAME               formatted physical plan, no execution
+    explain NAME               formatted physical plan of the result frame
 
 Options: --sf-dir DIR (default /root/testdata/sf0.01), --show N
 (default 20 rows to stdout), --out PATH --format parquet|csv|json
 (write instead of show), --explain (print the plan before running).
+
+``explain`` does not execute the result frame, but building the frame
+may execute: iterative queries (``part_copurchase_hops``, the pagerank
+family) run every round, and staged queries build their store on first
+use, while the plan is built.
 
 Runs on the repo's tuned session (`session.get_spark`: AQE, Arrow,
 UTC); under spark-submit the same module works as the application
@@ -34,7 +39,12 @@ def main(argv: list[str] | None = None) -> int:
         p.add_argument("--show", type=int, default=20)
         p.add_argument("--out", default=None)
         p.add_argument("--format", default="parquet", choices=["parquet", "csv", "json"])
-        p.add_argument("--explain", action="store_true")
+        p.add_argument(
+            "--explain",
+            action="store_true",
+            help="print the plan before running (iterative queries have "
+            "already run their rounds by then)",
+        )
 
     p_run = sub.add_parser("run", help="run one registered query")
     p_run.add_argument("name")
@@ -42,7 +52,11 @@ def main(argv: list[str] | None = None) -> int:
     p_sql = sub.add_parser("sql", help="ad-hoc SQL over the fixture views")
     p_sql.add_argument("statement")
     add_run_opts(p_sql)
-    p_exp = sub.add_parser("explain", help="print a query's physical plan")
+    p_exp = sub.add_parser(
+        "explain",
+        help="print a query's physical plan; iterative queries still run "
+        "every round while the plan is built",
+    )
     p_exp.add_argument("name")
     p_exp.add_argument("--sf-dir", default="/root/testdata/sf0.01")
     args = ap.parse_args(argv)

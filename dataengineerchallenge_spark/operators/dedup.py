@@ -35,17 +35,6 @@ from dataengineerchallenge_spark.sources.tables import spread
 _SEP = "\x1f"
 
 
-def _ckpt_index_enabled(df: DataFrame) -> bool:
-    """Dial for the r20 session-5 inverted-index materialization in
-    shingle_jaccard_pairs / dup_span_doc_frame (default true; false
-    restores the recompute-per-consumer plan exactly — same values,
-    used by the same-session A/B, tools/bench_ckptindex_ab.py)."""
-    return (
-        df.sparkSession.conf.get("spark.graft.dedup.ckptInvertedIndex", "true")
-        == "true"
-    )
-
-
 def content_hash(*cols: str | Column) -> Column:
     """sha2-256 hex digest of the concatenated content columns (N1).
 
@@ -133,8 +122,7 @@ def shingle_jaccard_pairs(
     # rows instead of re-scanning the corpus — at 100 TB that is two
     # full corpus passes removed. Values are identical (same rows, same
     # floats; only the materialization point moves).
-    if _ckpt_index_enabled(df):
-        sh = sh.localCheckpoint()
+    sh = sh.localCheckpoint()
     sizes_all = sh.groupBy("_id").agg(F.count("*").alias("_n"))
     if max_shingle_freq is not None:
         freq = sh.groupBy("_sh").agg(F.count("*").alias("_df"))
@@ -676,9 +664,8 @@ def dup_span_doc_frame(
     # re-verify), and the executed plan re-ran the split+slice text pass
     # once per consumer (profiled: two ~3 s repeat-explode stages at
     # sf0.1). One materialization, every consumer reads the narrow gram
-    # rows; identical values either way (dial: see _ckpt_index_enabled).
-    if _ckpt_index_enabled(df):
-        sh = sh.localCheckpoint()
+    # rows.
+    sh = sh.localCheckpoint()
     if cand_mode not in ("auto", "broadcast", "shuffle"):
         raise ValueError(f"cand_mode must be auto|broadcast|shuffle, got {cand_mode!r}")
     if hash_grams:

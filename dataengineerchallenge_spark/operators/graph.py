@@ -80,7 +80,9 @@ def _bc(df: DataFrame) -> DataFrame:
     2.8 s, SCC 24.9 vs 22.4 s) AQE already demotes the round join to
     broadcast from materialized runtime stats with LESS serialized
     build latency than the explicit hint, so those loops carry no
-    hint — forcing one there was measured strictly slower."""
+    hint — forcing one there was measured strictly slower. LPA and
+    coreness are the exception since their edge caches went keyed: the
+    hint keeps the keyed cache the streamed side (see ``_keyed``)."""
     if (
         df.sparkSession.conf.get("spark.graft.graph.broadcastIterate", "true")
         == "true"
@@ -123,34 +125,12 @@ def _narrowed(df: DataFrame, n_rows: int) -> DataFrame:
 
     ``coalesce`` is a narrow dependency reading the already-cached
     blocks, so this costs no shuffle and cannot change any result set —
-    only the task count per round. Dial:
-    ``spark.graft.graph.narrowLoopFrames`` (default true; false restores
-    the uncompacted layout — used by the same-session A/B)."""
-    if not _narrow_enabled(df):
-        return df
+    only the task count per round."""
     parts = df.rdd.getNumPartitions()
     want = max(1, min(parts, -(-n_rows // _LOOP_CACHE_ROWS_PER_PART)))
     if want < parts:
         return df.coalesce(want)
     return df
-
-
-def _narrow_enabled(df: DataFrame) -> bool:
-    return (
-        df.sparkSession.conf.get("spark.graft.graph.narrowLoopFrames", "true")
-        == "true"
-    )
-
-
-def _keyed_enabled(df: DataFrame) -> bool:
-    """Dial for the aggregation-keyed loop caches (r20 session 5).
-    Nested under ``narrowLoopFrames``: turning either dial off restores
-    the previous layout (coalesce-compacted for ``keyedLoopFrames=
-    false``, fully legacy for ``narrowLoopFrames=false``)."""
-    return _narrow_enabled(df) and (
-        df.sparkSession.conf.get("spark.graft.graph.keyedLoopFrames", "true")
-        == "true"
-    )
 
 
 def _stats_keyed(e: DataFrame, key: str) -> DataFrame:
@@ -195,19 +175,17 @@ def _keyed(e_cached: DataFrame, n_rows: int, key: str):
     loop's lifetime (the documented HITS trade); the caller unpersists
     both.
 
-    Returns ``(loop_frame, keyed_frame_or_None)`` — the second element
-    is the extra persisted frame the caller must release after the
-    loop (None when a dial routed to the legacy layout).
+    Returns the persisted keyed frame. Per-round-execution loops must
+    broadcast-hint their iterate side so the keyed frame is the STREAMED
+    join side: otherwise AQE may broadcast the edge cache itself and
+    discard the layout.
     """
     from pyspark import StorageLevel
 
-    if not _keyed_enabled(e_cached):
-        return _narrowed(e_cached, n_rows), None
     spark = e_cached.sparkSession
     cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
     k = max(1, min(cap, -(-n_rows // _LOOP_CACHE_ROWS_PER_PART)))
-    part = e_cached.repartition(k, key).persist(StorageLevel.MEMORY_AND_DISK)
-    return part, part
+    return e_cached.repartition(k, key).persist(StorageLevel.MEMORY_AND_DISK)
 
 
 def _explode_members(spark) -> bool:
@@ -218,8 +196,7 @@ def _explode_members(spark) -> bool:
     executed plan re-ran the wedge + closing joins once per branch
     (only the exchanges were reused). Values are identical either way —
     the union IS union-all, so both forms produce the same row
-    multiset; only the plan shape differs. Used by the same-session
-    A/B (tools/bench_explode_ab.py)."""
+    multiset; only the plan shape differs. A/B it with tools/ab.py."""
     return (
         spark.conf.get("spark.graft.graph.explodeMembers", "true") == "true"
     )
@@ -237,16 +214,7 @@ def _seed1(spark, source, seed_t: str, col2: str, val2: int, t2: str) -> DataFra
     for ``coalesce(1)`` instead: a Coalesce node over the parallelized
     seed RDD was measured ~8x SLOWER per round (23 s total) — it blocks
     the local-relation short-circuits for every plan the seed's lineage
-    reaches (probe transcript in OPTIMIZATION_r20.md Change 6).
-    Values are identical either way; only the partitioning differs.
-    Shares the ``spark.graft.graph.narrowLoopFrames`` dial."""
-    if (
-        spark.conf.get("spark.graft.graph.narrowLoopFrames", "true")
-        != "true"
-    ):
-        return spark.createDataFrame(
-            [(source, val2)], f"node {seed_t}, {col2} {t2}"
-        )
+    reaches (probe transcript in OPTIMIZATION_r20.md Change 6)."""
     return spark.range(0, 1, 1, 1).select(
         F.lit(source).cast(seed_t).alias("node"),
         F.lit(val2).cast(t2).alias(col2),
@@ -372,27 +340,24 @@ def pagerank(
     # write costs more than the bare re-scan it saves.
     # MEMORY_AND_DISK so an edge set bigger than executor memory spills
     # instead of failing; both frames are lazy until the first action.
-    if _keyed_enabled(e):
-        # r20 session 5: the per-round contribution aggregate groups by
-        # dst, and the executed plan paid one edge-scale partial-agg →
-        # Exchange → final-agg stage pair PER ROUND for it
-        # (plans/r20/part_copurchase_pagerank_staged_before_keyed.txt).
-        # Laying the loop-invariant cache out as HashPartitioning(dst, k)
-        # once makes every round's groupBy("dst") exchange-free in place
-        # on the cache — the HITS Change-2 layout applied to pagerank.
-        # Unlike HITS, k comes from the edge frame's OPTIMIZED-PLAN
-        # stats, not a count action: a first-cut counted variant paid a
-        # full extra pass over the edge build plus a second cached copy
-        # (task-time A/B: CPU 24.8 → 34.4 s, shuffle 23.5 → 32.1 MB) —
-        # the wrong trade at 100 TB. Sizing shared via _stats_keyed
-        # (r21: the spectral loops use the same layout).
-        eo = (
-            _stats_keyed(e, "dst")
-            .join(_bc(outdeg), "src")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-    else:
-        eo = e.join(_bc(outdeg), "src").persist(StorageLevel.MEMORY_AND_DISK)
+    # r20 session 5: the per-round contribution aggregate groups by
+    # dst, and the executed plan paid one edge-scale partial-agg →
+    # Exchange → final-agg stage pair PER ROUND for it
+    # (plans/r20/part_copurchase_pagerank_staged_before_keyed.txt).
+    # Laying the loop-invariant cache out as HashPartitioning(dst, k)
+    # once makes every round's groupBy("dst") exchange-free in place
+    # on the cache — the HITS Change-2 layout applied to pagerank.
+    # Unlike HITS, k comes from the edge frame's OPTIMIZED-PLAN
+    # stats, not a count action: a first-cut counted variant paid a
+    # full extra pass over the edge build plus a second cached copy
+    # (task-time A/B: CPU 24.8 → 34.4 s, shuffle 23.5 → 32.1 MB) —
+    # the wrong trade at 100 TB. Sizing shared via _stats_keyed
+    # (r21: the spectral loops use the same layout).
+    eo = (
+        _stats_keyed(e, "dst")
+        .join(_bc(outdeg), "src")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
     nodes = nodes.persist(StorageLevel.MEMORY_AND_DISK)
     dang = None
     n_nodes = None
@@ -666,51 +631,29 @@ def hits(
     # PARTITION (huge across thousands of map partitions), while the
     # co-partitioned aggregate moves nothing. Upfront cost: two |E|
     # repartitions, paid once, amortized over 2·iters aggregations.
+    #
+    # r20: size the two partitioned caches from the MEASURED edge count
+    # instead of the static spark.sql.shuffle.partitions width (the
+    # groupBy stays exchange-free under HashPartitioning(key, k) for ANY
+    # k — aggregation only needs a clustered distribution) — at fixture
+    # scale each half-step then schedules a few tasks instead of 32-64
+    # near-empty ones (profiled: ~1.5-2.3 s of zero-CPU scheduling per
+    # half-step stage), and at 100 TB the clamp keeps the configured
+    # width. The count is one parquet-metadata-cheap action on the
+    # UNCACHED edge frame.
     spark = e.sparkSession
-    if spark.conf.get("spark.graft.graph.narrowLoopFrames", "true") == "true":
-        # r20: size the two partitioned caches from the MEASURED edge
-        # count instead of the static spark.sql.shuffle.partitions width
-        # (the groupBy stays exchange-free under HashPartitioning(key, k)
-        # for ANY k — aggregation only needs a clustered distribution) —
-        # at fixture scale each half-step then schedules a few tasks
-        # instead of 32-64 near-empty ones (profiled: ~1.5-2.3 s of
-        # zero-CPU scheduling per half-step stage), and at 100 TB the
-        # clamp keeps the configured width. The count is one
-        # parquet-metadata-cheap action on the UNCACHED edge frame.
-        cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        k = max(1, min(cap, -(-e.count() // _LOOP_CACHE_ROWS_PER_PART)))
-        e_dst = e.repartition(k, "dst").persist(StorageLevel.MEMORY_AND_DISK)
-        # r21 memory-trade dial (VERDICT r20 next-round #6): true drops
-        # the second partitioned copy — the h-half-step then reads the
-        # dst-keyed cache and pays one groupBy(src) exchange per round,
-        # halving the loop's cache footprint. Measured A/B + per-cache
-        # storage bytes in BENCH_hitsmem.json; default keeps the
-        # exchange-free dual layout.
-        if (
-            spark.conf.get("spark.graft.graph.hitsSingleCache", "false")
-            == "true"
-        ):
-            e_src = e_dst
-        else:
-            e_src = e.repartition(k, "src").persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-        # side cardinalities now come from frames the loop materializes
-        # anyway (h below; the first authority half-step) — the old
-        # count_distinct-pair setup stage was the profiler's single
-        # heaviest item (16.4 s task time for 3.6 MB of input: EXPAND
-        # doubles the rows, then a 32-partition distinct shuffle)
-        n_hubs = n_auths = None
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    k = max(1, min(cap, -(-e.count() // _LOOP_CACHE_ROWS_PER_PART)))
+    e_dst = e.repartition(k, "dst").persist(StorageLevel.MEMORY_AND_DISK)
+    # r21 memory-trade dial (VERDICT r20 next-round #6): true drops the
+    # second partitioned copy — the h-half-step then reads the dst-keyed
+    # cache and pays one groupBy(src) exchange per round, halving the
+    # loop's cache footprint. Measured A/B + per-cache storage bytes in
+    # BENCH_hitsmem.json; default keeps the exchange-free dual layout.
+    if spark.conf.get("spark.graft.graph.hitsSingleCache", "false") == "true":
+        e_src = e_dst
     else:
-        e_dst = e.repartition("dst").persist(StorageLevel.MEMORY_AND_DISK)
-        e_src = e.repartition("src").persist(StorageLevel.MEMORY_AND_DISK)
-        # both side cardinalities in ONE action (was two sequential count
-        # jobs — same scan twice; count_distinct pair folds them into a
-        # single pass, which also materializes the e_src cache)
-        _sides = e_src.agg(
-            F.count_distinct("src").alias("nh"), F.count_distinct("dst").alias("na")
-        ).collect()[0]
-        n_hubs, n_auths = _sides["nh"], _sides["na"]
+        e_src = e.repartition(k, "src").persist(StorageLevel.MEMORY_AND_DISK)
 
     def _renorm(raw: DataFrame, n_side: int) -> DataFrame:
         total = raw.agg(F.sum("s").alias("_t"))
@@ -723,11 +666,13 @@ def hits(
     h = e_src.select(F.col("src").alias("node")).distinct().select(
         "node", F.lit(1.0).alias("s")
     ).localCheckpoint()
-    if n_hubs is None:
-        # one row per distinct src by construction — a count over the
-        # |V|-row checkpoint just materialized, no extra corpus pass
-        n_hubs = h.count()
-    a_raw = None
+    # side cardinalities come from frames the loop materializes anyway
+    # (a count_distinct-pair setup stage was the profiler's single
+    # heaviest item: 16.4 s task time for 3.6 MB of input). One row per
+    # distinct src by construction — a count over the |V|-row checkpoint
+    # just materialized, no extra corpus pass
+    n_hubs = h.count()
+    n_auths = a_raw = None
     h_frame = h
     for _ in range(iters):
         # checkpoint the RAW half-step aggregate (one exchange-free
@@ -847,16 +792,7 @@ def connected_components_star(
             F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v")
         )
     )
-    # dial spark.graft.graph.assumeDistinctPairs (default true) exists
-    # for the A/B and before-plan reproduction: false re-applies the
-    # distinct even for promising callers (legacy plan, same values).
-    if not (
-        distinct_pairs
-        and edges.sparkSession.conf.get(
-            "spark.graft.graph.assumeDistinctPairs", "true"
-        )
-        == "true"
-    ):
+    if not distinct_pairs:
         e = e.distinct()
     e = e.localCheckpoint()
     prev = None
@@ -1129,7 +1065,7 @@ def label_propagation(
     # node, so the keyed cache makes each round's TWO exchanges vanish
     # (HashPartitioning(dst) satisfies ClusteredDistribution(dst, label)
     # and ClusteredDistribution(node) alike)
-    e, e_keyed = _keyed(e_cached, e_cached.count(), "dst")
+    e = _keyed(e_cached, e_cached.count(), "dst")
     labels = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
@@ -1145,12 +1081,9 @@ def label_propagation(
         # count and the top-1 window run exchange-free (without the
         # hint AQE broadcasts whichever side is smaller; at fixture
         # scale that is often the edge cache itself, which throws the
-        # keyed partitioning away). Applied ONLY under the keyed dial:
-        # the legacy layouts measured the blanket hint slower (see
-        # _bc's measured-revert note).
-        lab_side = _bc(labels) if e_keyed is not None else labels
+        # keyed partitioning away)
         counts = (
-            e.join(lab_side, e["src"] == labels["node"])
+            e.join(_bc(labels), e["src"] == labels["node"])
             .groupBy(F.col("dst").alias("node"), "label")
             .agg(F.count(F.lit(1)).alias("c"))
         )
@@ -1161,8 +1094,7 @@ def label_propagation(
             .localCheckpoint()
         )
     e_cached.unpersist()
-    if e_keyed is not None:
-        e_keyed.unpersist()
+    e.unpersist()
     return labels.select("node", F.col("label").alias("community"))
 
 
@@ -1216,7 +1148,7 @@ def coreness(
     # keyed on dst (r20 session 5): each round's neighbor-value window
     # and h-index max both cluster on the dst-derived node, so the keyed
     # cache removes the per-round window exchange
-    e, e_keyed = _keyed(e_cached, e_cached.count(), "dst")
+    e = _keyed(e_cached, e_cached.count(), "dst")
     vals = (
         e.groupBy(F.col("src").alias("node"))
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
@@ -1227,9 +1159,8 @@ def coreness(
         # keyed layout: hint the |V|-row value side broadcast so the
         # keyed edge cache is the streamed side and the window + h-index
         # max run exchange-free on HashPartitioning(dst) (see the LPA
-        # note; hint active only under the keyed dial)
-        val_side = _bc(vals) if e_keyed is not None else vals
-        nb = e.join(val_side, e["src"] == vals["node"]).select(
+        # note)
+        nb = e.join(_bc(vals), e["src"] == vals["node"]).select(
             F.col("dst").alias("node"), "c"
         )
         vals = (
@@ -1239,8 +1170,7 @@ def coreness(
             .localCheckpoint()
         )
     e_cached.unpersist()
-    if e_keyed is not None:
-        e_keyed.unpersist()
+    e.unpersist()
     return vals.select("node", F.col("c").alias("core"))
 
 

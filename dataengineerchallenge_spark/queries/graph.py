@@ -494,15 +494,9 @@ def part_pair_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct()
+        .repartition("l_orderkey")
+        .localCheckpoint(eager=False)
     )
-    # r21: dial added so the r20 checkpoint change gets the alternating
-    # A/B readout the other changes have (VERDICT r20 what's-wrong #2);
-    # false restores the legacy rederive-per-consumer plan exactly.
-    if (
-        spark.conf.get("spark.graft.graph.ckptDistinctPairs", "true")
-        == "true"
-    ):
-        op = op.repartition("l_orderkey").localCheckpoint(eager=False)
     n_orders = op.agg(F.count_distinct("l_orderkey").alias("n_orders"))
     freq = op.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("f"))
     a = op.alias("a")
@@ -682,13 +676,9 @@ def weighted_copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct()
+        .repartition("l_orderkey")
+        .localCheckpoint(eager=False)
     )
-    # r21: same ckptDistinctPairs dial as part_pair_affinity (A/B).
-    if (
-        spark.conf.get("spark.graft.graph.ckptDistinctPairs", "true")
-        == "true"
-    ):
-        op = op.repartition("l_orderkey").localCheckpoint(eager=False)
     a, b = op.alias("a"), op.alias("b")
     edges = (
         a.join(b, "l_orderkey")
@@ -1883,15 +1873,9 @@ def part_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct()
+        .repartition("l_orderkey")
+        .localCheckpoint(eager=False)
     )
-    # r21: dial added so the r20 checkpoint change gets the alternating
-    # A/B readout the other changes have (VERDICT r20 what's-wrong #2);
-    # false restores the legacy rederive-per-consumer plan exactly.
-    if (
-        spark.conf.get("spark.graft.graph.ckptDistinctPairs", "true")
-        == "true"
-    ):
-        op = op.repartition("l_orderkey").localCheckpoint(eager=False)
     n_orders = op.agg(F.count_distinct("l_orderkey").alias("n_orders"))
     freq = op.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("fr"))
     a, b = op.alias("a"), op.alias("b")
@@ -2415,10 +2399,7 @@ def spectral_smoothing(
     from pyspark import StorageLevel
 
     from dataengineerchallenge_spark.functions.hashing import spark_u32
-    from dataengineerchallenge_spark.operators.graph import (
-        _keyed_enabled,
-        _stats_keyed,
-    )
+    from dataengineerchallenge_spark.operators.graph import _stats_keyed
 
     # r21 change 2 (guide §2.4; the pagerank Change-12 layout applied to
     # the repo's two heaviest registered plans): the per-round matvec is
@@ -2428,13 +2409,8 @@ def spectral_smoothing(
     # the legacy layout paid one edge-scale partial-agg → Exchange →
     # final-agg stage pair PER ROUND. deg then derives from the keyed
     # cache (same groupBy key: also exchange-free, and its collect
-    # doubles as the cache-materializing action). Values are identical
-    # either way; dial spark.graft.graph.keyedLoopFrames routes back to
-    # the legacy layout.
-    if _keyed_enabled(e):
-        ep = _stats_keyed(e, "src").persist(StorageLevel.MEMORY_AND_DISK)
-    else:
-        ep = e.persist(StorageLevel.MEMORY_AND_DISK)
+    # doubles as the cache-materializing action).
+    ep = _stats_keyed(e, "src").persist(StorageLevel.MEMORY_AND_DISK)
     deg = ep.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     stats = deg.agg(
         F.count(F.lit(1)).alias("n"), F.max("d").alias("dmax")
@@ -2689,18 +2665,12 @@ def spectral_second_direction(
     from pyspark import StorageLevel
 
     from dataengineerchallenge_spark.functions.hashing import spark_u32
-    from dataengineerchallenge_spark.operators.graph import (
-        _keyed_enabled,
-        _stats_keyed,
-    )
+    from dataengineerchallenge_spark.operators.graph import _stats_keyed
 
     # r21 change 2: same keyed-cache layout as direction 1 (see
     # spectral_smoothing) — the per-round matvec groupBy(src) runs
     # exchange-free on the HashPartitioning(src, k) cache.
-    if _keyed_enabled(e):
-        ep = _stats_keyed(e, "src").persist(StorageLevel.MEMORY_AND_DISK)
-    else:
-        ep = e.persist(StorageLevel.MEMORY_AND_DISK)
+    ep = _stats_keyed(e, "src").persist(StorageLevel.MEMORY_AND_DISK)
     deg = ep.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     stats = deg.agg(
         F.count(F.lit(1)).alias("n"), F.max("d").alias("dmax")

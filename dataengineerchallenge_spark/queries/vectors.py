@@ -1593,8 +1593,7 @@ def _ckpt_serve_luts(spark: SparkSession) -> bool:
     .txt) and each broadcast build was its own multi-stage job. Values
     are bit-identical either way (same joins, same groups, same input
     row order — the batch payload is a single-file scan); only the
-    plan shape differs. Used by the same-session A/B
-    (tools/bench_servestage_ab.py)."""
+    plan shape differs. A/B it with tools/ab.py."""
     return (
         spark.conf.get("spark.graft.vectors.ckptServeLuts", "true") == "true"
     )

@@ -226,16 +226,10 @@ def test_star_cc_orientation_and_duplicate_invariance(spark):
 def test_star_cc_distinct_pairs_promise_identical(spark):
     """`distinct_pairs=True` (r21: skip the opening distinct when the
     caller promises one row per unordered pair) must label identically
-    to the default path — on a distinct src<dst edge list, under both
-    states of the assumeDistinctPairs dial."""
+    to the default path on a distinct src<dst edge list."""
     base = [(1, 2), (2, 3), (3, 4), (5, 6), (4, 9), (7, 8)]
     want = _star_labels(spark, base)
     assert _star_labels(spark, base, distinct_pairs=True) == want
-    spark.conf.set("spark.graft.graph.assumeDistinctPairs", "false")
-    try:
-        assert _star_labels(spark, base, distinct_pairs=True) == want
-    finally:
-        spark.conf.unset("spark.graft.graph.assumeDistinctPairs")
 
 
 def test_star_cc_agrees_with_min_label_on_near_dup_graph(spark):

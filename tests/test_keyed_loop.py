@@ -4,11 +4,10 @@
 - _keyed lays a loop-invariant cache out as HashPartitioning(key, k)
   with k = ceil(n / 64k) clamped to the configured shuffle width, so
   the per-round aggregation keyed on `key` runs exchange-free;
-- with `spark.graft.graph.keyedLoopFrames=false` it degrades to the
-  Change-6 coalesce layout (and under narrowLoopFrames=false to the
-  fully legacy one);
 - the four keyed operators — pagerank, label_propagation, coreness,
-  hop_distances — return identical results under either dial.
+  hop_distances — return pinned values on one small graph. The test
+  name dates from when the keyed layout had an off switch; the literals
+  are the values the coalesced and uncompacted layouts produced.
 """
 
 from __future__ import annotations
@@ -24,9 +23,6 @@ from dataengineerchallenge_spark.operators.graph import (
     pagerank,
 )
 
-FLAG = "spark.graft.graph.keyedLoopFrames"
-NARROW = "spark.graft.graph.narrowLoopFrames"
-
 
 def _both_dirs(spark, pairs):
     e = spark.createDataFrame(pairs, "src long, dst long")
@@ -37,9 +33,8 @@ def test_keyed_partitions_on_key(spark):
     df = spark.range(0, 1000).select(
         (F.col("id") % 7).alias("dst"), F.col("id").alias("src")
     ).repartition(16)
-    out, extra = _keyed(df, 1000, "dst")
+    out = _keyed(df, 1000, "dst")
     try:
-        assert extra is out  # keyed frame is the persisted extra copy
         # tiny frame -> one partition, and the partitioning is the hash
         # layout (all rows of one key in one partition)
         assert out.rdd.getNumPartitions() == 1
@@ -53,8 +48,7 @@ def test_keyed_partitions_on_key(spark):
         above_cache = executed.split("InMemoryTableScan", 1)[0]
         assert "Exchange" not in above_cache
     finally:
-        if extra is not None:
-            extra.unpersist()
+        out.unpersist()
 
 
 def test_keyed_clamps_to_shuffle_width(spark):
@@ -62,25 +56,11 @@ def test_keyed_clamps_to_shuffle_width(spark):
         F.col("id").alias("dst"), F.col("id").alias("src")
     )
     cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    out, extra = _keyed(df, 1000 * _LOOP_CACHE_ROWS_PER_PART * cap, "dst")
+    out = _keyed(df, 1000 * _LOOP_CACHE_ROWS_PER_PART * cap, "dst")
     try:
         assert out.rdd.getNumPartitions() == cap
     finally:
-        if extra is not None:
-            extra.unpersist()
-
-
-def test_keyed_dial_off_routes_to_narrowed(spark):
-    spark.conf.set(FLAG, "false")
-    try:
-        df = spark.range(0, 10).select(
-            F.col("id").alias("dst"), F.col("id").alias("src")
-        ).repartition(8)
-        out, extra = _keyed(df, 10, "dst")
-        assert extra is None
-        assert out.rdd.getNumPartitions() == 1  # _narrowed coalesce
-    finally:
-        spark.conf.unset(FLAG)
+        out.unpersist()
 
 
 def test_four_operators_identical_either_dial(spark):
@@ -93,30 +73,24 @@ def test_four_operators_identical_either_dial(spark):
         [(1, 2), (2, 3), (3, 4), (2, 5), (5, 6)], "src long, dst long"
     )
 
-    def run_all():
-        pr = sorted(
-            (r["node"], round(r["pr"], 9))
-            for r in pagerank(und, iters=4).collect()
-        )
-        lpa = sorted(tuple(r) for r in label_propagation(und, iters=4).collect())
-        core = sorted(tuple(r) for r in coreness(und, iters=4).collect())
-        bfs = sorted(tuple(r) for r in hop_distances(directed, max_hops=5).collect())
-        return pr, lpa, core, bfs
-
-    keyed = run_all()
-    spark.conf.set(FLAG, "false")
-    try:
-        coalesced = run_all()
-    finally:
-        spark.conf.unset(FLAG)
-    spark.conf.set(NARROW, "false")
-    try:
-        legacy = run_all()
-    finally:
-        spark.conf.unset(NARROW)
-    assert keyed == coalesced == legacy
-    # sanity-pin a few exact integers
-    assert keyed[3] == [(1, 0), (2, 1), (3, 2), (4, 3), (5, 2), (6, 3)]
-    assert keyed[2] == sorted(
+    pr = sorted(
+        (r["node"], round(r["pr"], 9)) for r in pagerank(und, iters=4).collect()
+    )
+    lpa = sorted(tuple(r) for r in label_propagation(und, iters=4).collect())
+    core = sorted(tuple(r) for r in coreness(und, iters=4).collect())
+    bfs = sorted(tuple(r) for r in hop_distances(directed, max_hops=5).collect())
+    # the 2-node component's labels swap every round
+    assert pr == [
+        (1, 0.940505165),
+        (2, 0.940505165),
+        (3, 1.439073698),
+        (4, 1.043352951),
+        (5, 0.636563021),
+        (10, 1.0),
+        (11, 1.0),
+    ]
+    assert lpa == [(1, 1), (2, 1), (3, 1), (4, 1), (5, 1), (10, 10), (11, 11)]
+    assert bfs == [(1, 0), (2, 1), (3, 2), (4, 3), (5, 2), (6, 3)]
+    assert core == sorted(
         [(1, 2), (2, 2), (3, 2), (4, 1), (5, 1), (10, 1), (11, 1)]
     )

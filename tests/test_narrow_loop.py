@@ -5,8 +5,9 @@
   NEVER widens one at or above its natural width (the 100 TB clamp);
 - _seed1 builds a one-row, ONE-partition seed whose values equal the
   createDataFrame seed it replaced;
-- the dial off restores the uncompacted layout with identical results —
-  hop_distances and weighted_sssp return the same rows either way.
+- hop_distances, weighted_sssp and hits return pinned exact values.
+  The `*_either_dial` names date from when the compaction had an off
+  switch; the literals are the values both layouts produced.
 """
 
 from __future__ import annotations
@@ -22,8 +23,6 @@ from dataengineerchallenge_spark.operators.graph import (
     weighted_sssp,
 )
 
-FLAG = "spark.graft.graph.narrowLoopFrames"
-
 
 def test_narrowed_compacts_tiny_frame(spark):
     df = spark.range(0, 1000).repartition(16)
@@ -38,15 +37,6 @@ def test_narrowed_keeps_natural_width_at_scale(spark):
     # must keep the frame's existing width, never widen it
     out = _narrowed(df, 100 * _LOOP_CACHE_ROWS_PER_PART)
     assert out.rdd.getNumPartitions() == 4
-
-
-def test_narrowed_dial_off_is_identity(spark):
-    spark.conf.set(FLAG, "false")
-    try:
-        df = spark.range(0, 10).repartition(8)
-        assert _narrowed(df, 10).rdd.getNumPartitions() == 8
-    finally:
-        spark.conf.unset(FLAG)
 
 
 def test_seed1_one_partition_same_values(spark):
@@ -70,34 +60,26 @@ def test_bfs_and_sssp_results_identical_either_dial(spark):
     )
     base_bfs = sorted(tuple(r) for r in hop_distances(edges, max_hops=4).collect())
     base_sssp = sorted(tuple(r) for r in weighted_sssp(wedges, rounds=8).collect())
-    spark.conf.set(FLAG, "false")
-    try:
-        off_bfs = sorted(tuple(r) for r in hop_distances(edges, max_hops=4).collect())
-        off_sssp = sorted(
-            tuple(r) for r in weighted_sssp(wedges, rounds=8).collect()
-        )
-    finally:
-        spark.conf.unset(FLAG)
-    assert base_bfs == off_bfs
-    assert base_sssp == off_sssp
     assert base_bfs == [(1, 0), (2, 1), (3, 2), (4, 3), (5, 2)]
     assert base_sssp == [(1, 0), (2, 4), (3, 5), (4, 7)]
 
 
 def test_hits_identical_either_dial(spark):
-    # the adaptive path derives n_hubs/n_auths from the h frame and the
-    # first authority half-step instead of the count_distinct pair —
-    # scores must match the legacy path bit-for-bit
+    # n_hubs/n_auths derive from the h frame and the first authority
+    # half-step; the literals (9 decimal places) are the scores the
+    # count_distinct-pair path produced
     edges = spark.createDataFrame(
         [(1, 10), (1, 11), (2, 10), (3, 11), (3, 12)], "src long, dst long"
     )
     base = sorted(tuple(r) for r in hits(edges, iters=3).collect())
-    spark.conf.set(FLAG, "false")
-    try:
-        legacy = sorted(tuple(r) for r in hits(edges, iters=3).collect())
-    finally:
-        spark.conf.unset(FLAG)
-    assert base == legacy
+    assert [(n, kind, round(s, 9)) for n, kind, s in base] == [
+        (1, "hub", 1.340425532),
+        (2, "hub", 0.606382979),
+        (3, "hub", 1.053191489),
+        (10, "authority", 1.096153846),
+        (11, "authority", 1.326923077),
+        (12, "authority", 0.576923077),
+    ]
     # hubs cover {1,2,3}, authorities {10,11,12}, mean-1 scaled per side
     hubs = [s for n, kind, s in base if kind == "hub"]
     auths = [s for n, kind, s in base if kind == "authority"]

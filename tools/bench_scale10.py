@@ -15,6 +15,10 @@ by this generator's parameters), not a cached result: every timed run
 computes from it through the same staged/serve machinery as the
 driver fixture.
 
+Each case is sampled by ``tools/ab.py``'s ``sample`` (values
+``true,false``). Once the corpus exists, any other conf can be A/B'd on
+it with ``tools/ab.py`` and ``q@<OUT_DIR>``.
+
     python tools/bench_scale10.py          -> BENCH_sf1.json
     python tools/bench_scale10.py q1 q2    -> only those rows, merged
 """
@@ -23,11 +27,11 @@ from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 os.environ.setdefault("PYSPARK_SUBMIT_ARGS", "--driver-memory 12g pyspark-shell")
 
 SRC_SF = "/root/testdata/sf0.1"
@@ -37,17 +41,7 @@ SHIFT = 10_000_000
 
 # (query, dial flag, samples per setting)
 CASES = [
-    ("part_copurchase_pagerank_staged", "spark.graft.graph.keyedLoopFrames", 2),
     ("part_copurchase_pagerank_staged", "spark.graft.graph.broadcastIterate", 2),
-    ("copurchase_communities_lpa", "spark.graft.graph.keyedLoopFrames", 2),
-    ("copurchase_coreness", "spark.graft.graph.keyedLoopFrames", 2),
-    ("part_copurchase_hops", "spark.graft.graph.narrowLoopFrames", 2),
-    ("purchase_hits_staged", "spark.graft.graph.narrowLoopFrames", 2),
-    ("part_pair_affinity", "spark.graft.graph.ckptDistinctPairs", 2),
-    ("copurchase_components_staged", "spark.graft.graph.assumeDistinctPairs", 2),
-    ("near_dup_jaccard", "spark.graft.dedup.ckptInvertedIndex", 2),
-    ("dup_span_trim_docs", "spark.graft.dedup.ckptInvertedIndex", 2),
-    ("copurchase_spectral_bipartition", "spark.graft.graph.keyedLoopFrames", 1),
 ]
 
 
@@ -137,6 +131,7 @@ def _write(out_path: str, cases: dict) -> None:
 
 def main() -> None:
     import __spark_entry__ as e
+    from ab import sample
     from dataengineerchallenge_spark.session import get_spark
 
     spark = get_spark("bench-scale10")
@@ -157,31 +152,14 @@ def main() -> None:
             continue
         key = f"{name}::{flag.rsplit('.', 1)[-1]}"
         try:
-            qs[name](spark, OUT_DIR).write.format("noop").mode("overwrite").save()
+            out[key] = {
+                "flag": flag,
+                **sample(spark, qs[name], OUT_DIR, flag, ["true", "false"], n),
+            }
+            print(key, out[key]["median_s"], flush=True)
         except Exception as exc:  # noqa: BLE001
             out[key] = {"error": type(exc).__name__}
             print(key, "ERROR", type(exc).__name__, flush=True)
-            _write(out_path, out)
-            continue
-        samples: dict[str, list[float]] = {"on": [], "off": []}
-        for _ in range(n):
-            for setting in ("on", "off"):
-                spark.conf.set(flag, "true" if setting == "on" else "false")
-                t1 = time.time()
-                qs[name](spark, OUT_DIR).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                samples[setting].append(round(time.time() - t1, 3))
-        spark.conf.unset(flag)
-        out[key] = {
-            "flag": flag,
-            "flag_on_s": samples["on"],
-            "flag_off_s": samples["off"],
-            "median_on_s": round(statistics.median(samples["on"]), 3),
-            "median_off_s": round(statistics.median(samples["off"]), 3),
-        }
-        print(key, out[key]["median_on_s"], "vs", out[key]["median_off_s"],
-              flush=True)
         _write(out_path, out)
     _write(out_path, out)
 
