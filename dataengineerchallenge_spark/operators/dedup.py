@@ -1,34 +1,48 @@
 """Deduplication operators (SURVEY.md §2 A9/N1/N2, J9).
 
-The reference's spec calls for handling "messy (ie real) data"
-(/root/reference/README.md:61); the driver's north star extends that to
-LLM-corpus dedup at 100 TB. Four strategies, cheapest first:
+The reference's spec calls for handling "messy (ie real) data"; the
+north star extends that to LLM-corpus dedup at 100 TB. Exact dedup is
+one content-hash aggregate (``exact_dedup``, keep-first). Every near-dup
+join is a candidate FILTER followed by an exact VERIFIER, the shape the
+similarity-join literature gives (AllPairs/PPJoin, Bayardo et al. WWW'07; filter-and-verify over
+compressed indexes, ICDE 2022):
 
-1. ``exact_dedup`` — content-hash (sha2) keep-first. One shuffle on the
-   hash key, partial-aggregatable (``min_by`` groupBy, NOT a window sort):
-   at 100 TB this is a plain hash aggregate whose map-side combine kills
-   most duplicates before the exchange.
-2. ``shingle_jaccard_pairs`` — EXACT n-gram Jaccard via an inverted-index
-   self-join on shingles (never an all-pairs crossJoin): the join key is
-   the shingle, so only docs sharing ≥1 shingle ever meet. The DuckDB
-   oracle for this is plain SQL, making it the hash-checked anchor the
-   approximate variants are validated against.
-3. ``minhash_lsh_pairs`` — MinHash + banded LSH (pyspark.ml), the
-   sub-quadratic scale path: candidate pairs come only from docs agreeing
-   on one band's hash bucket.
-4. ``simhash64`` / ``simhash_near_dup_pairs`` — 64-bit SimHash with
-   banded self-join on 16-bit sub-keys; hamming distance via bit_count.
+============  ===========================================  ==========================
+similarity    candidate filter                             verifier
+============  ===========================================  ==========================
+Jaccard       inverted index on shingles                   common-shingle count in the
+              (``shingle_jaccard_pairs``)                  same aggregate
+Jaccard       frequency-ordered prefixes                   ``array_intersect`` per pair
+              (``prefix_filter_candidates``)               (``shingle_jaccard_pairs_prefix``)
+Jaccard       banded MinHash collisions                    ``verify_jaccard``
+              (``minhash_band_frame`` →
+              ``band_collision_pairs``)
+Jaccard       MinHash LSH buckets (``minhash_lsh_pairs``)  pyspark.ml's distance
+Hamming (64)  four 16-bit bands of a fingerprint           ``banded_hamming_pairs``
+              (``simhash_frame``, payload hashes)
+edit distance EDJoin count + prefix filter                 ``levenshtein``
+              (``edit_distance_join``)
+============  ===========================================  ==========================
 
-All JVM-side (no Python UDFs); LSH model is seeded for determinism.
+Banded MinHash and SimHash sign with a ``HashFamily``: ``SEEDED``
+(xxhash64, the cheap engine hash; queries on it are rows-only) or
+``EXPLICIT`` (md5 + affine permutations, which a DuckDB oracle replays
+bit-for-bit). Both are stateless, so a batch signed later equals a full
+re-signing: the property the incremental and streaming dedup rest on.
+
+Span-level dedup (``dup_span_doc_frame``, ``suffix_dup_span_frame``,
+``winnow_fingerprint_frame``), sorted-neighborhood blocking and the Bloom
+prefilter complete the module. All JVM-side: no Python UDFs.
 """
 
 from __future__ import annotations
 
-from functools import reduce
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dataengineerchallenge_spark.functions.hashing import spark_u32
 from dataengineerchallenge_spark.sources.tables import spread
 
 # ASCII unit separator: unambiguous field joiner for content hashing
@@ -101,10 +115,13 @@ def shingle_jaccard_pairs(
     missing pairs whose entire overlap is stop-shingles — a recall
     trade-off, so it is None (exact) by default and in the oracled query.
     Doc sizes for the Jaccard denominator always use the unfiltered
-    shingle sets. (LEXICOGRAPHIC prefix filtering was measured here and
-    does NOT pay on this corpus — the ~30-word vocabulary makes such
-    prefixes non-selective; frequency-ordered AllPairs prefixes DO pay
-    and are implemented losslessly in ``shingle_jaccard_pairs_prefix``.)
+    shingle sets.
+
+    The lossless AllPairs prefix filter (``shingle_jaccard_pairs_prefix``)
+    does not beat this plan at fixture scale: it read 5× slower at sf0.1
+    on a 4-core box, and on a Zipfian corpus it wins only past about 100k
+    docs (BENCH_dedup.json ``prefix_zipf_*``: 9.45 vs 8.66 s at 100k,
+    17.43 vs 25.76 s at 200k, prefix vs plain).
 
     Returns (id_a, id_b, jaccard) with id_a < id_b.
     """
@@ -193,12 +210,14 @@ def shingle_jaccard_pairs_prefix(
     self-join runs only over prefix shingles and the full-overlap count
     is computed per CANDIDATE pair instead of per colliding shingle.
 
-    100 TB shape: the extra cost is one df-count aggregate + one
-    broadcast-sized join against the shingle-frequency table and a
-    per-doc window sort; the payoff is that candidate volume no longer
-    scales with the square of hot-shingle fanout (measured 2.8–11.8x
-    fewer candidates on the fixture corpus). Returns (id_a, id_b,
-    jaccard) with id_a < id_b.
+    The extra cost is one df-count aggregate, one join against the
+    shingle-frequency table and a per-doc window sort; in exchange the
+    candidate volume no longer grows with the square of hot-shingle
+    fanout. Measured, that trade loses at fixture scale: 5× slower than
+    the plain inverted index at sf0.1 on a 4-core box. It wins only past
+    about 100k docs on a Zipfian corpus (BENCH_dedup.json
+    ``prefix_zipf_*``: 9.45 vs 8.66 s at 100k, 17.43 vs 25.76 s at 200k,
+    prefix vs plain). Returns (id_a, id_b, jaccard) with id_a < id_b.
     """
     df = spread(df)
     sh = df.select(
@@ -279,78 +298,17 @@ def minhash_lsh_pairs(
     )
 
 
-def minhash_band_frame(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    num_hashes: int = 64,
-    band_rows: int = 4,
-    salt: int = 42,
-) -> DataFrame:
-    """(id, band, band_hash): banded MinHash signatures from a STATELESS
-    seeded hash family — h_i(x) = xxhash64(x, salt·1000 + i), no fitted
-    model — so signatures computed for an appended batch are bit-identical
-    to what a full recompute would produce for the same rows. That
-    property is what the incremental dedup split rests on: stage the
-    corpus's band table once, then near-dup a new delivery by signing
-    ONLY the new rows and joining against the staged bands (the N2 mirror
-    of the ANN side's frozen-codebook append).
-
-    Plan: explode distinct shingles → ``num_hashes`` codegen'd
-    min-aggregates in ONE hash aggregate (a doc's shingles start
-    co-partitioned, so map-side partials reduce each doc to a single
-    64-long row before the exchange — same shape as simhash_frame's bit
-    votes) → band assembly is a pure projection. All JVM-side.
-
-    Docs with fewer than ``n`` words have no shingles and yield no rows
-    (they cannot shingle-near-dup anything). Defaults: 64 hashes in 16
-    bands of 4 ⇒ P(candidate | J) = 1-(1-J⁴)¹⁶ ≈ 0.64 at J=0.5, 0.99 at
-    J=0.7 — the standard banding trade documented in the LSH literature.
-    """
-    if num_hashes % band_rows != 0:
-        raise ValueError(f"band_rows={band_rows} must divide num_hashes={num_hashes}")
-    sh = df.select(
-        F.col(id_col).alias("_id"), F.explode(word_shingles(text_col, n)).alias("_sh")
-    )
-    # wide expression lists are built as SQL text, ONE py4j call per
-    # column instead of one per operator node (r20: profiling showed
-    # ~2 s of PER-RUN DataFrame-construction time on the explicit twin
-    # — pure Python→JVM call latency, not Catalyst — for these
-    # 64-column aggregates; same functions, same values, same plan)
-    mins = sh.groupBy("_id").agg(
-        *[
-            F.expr(f"min(xxhash64(_sh, {salt * 1000 + i})) AS _h{i}")
-            for i in range(num_hashes)
-        ]
-    )
-    n_bands = num_hashes // band_rows
-    band_structs = ", ".join(
-        "struct({b} AS band, xxhash64({cols}) AS band_hash)".format(
-            b=b,
-            cols=", ".join(f"_h{b * band_rows + r}" for r in range(band_rows)),
-        )
-        for b in range(n_bands)
-    )
-    bands = F.expr(f"array({band_structs})")
-    return (
-        mins.select(F.col("_id"), F.explode(bands).alias("_b"))
-        .select(F.col("_id").alias(id_col), F.col("_b.band").alias("band"), F.col("_b.band_hash").alias("band_hash"))
-    )
-
-
-# --- Explicit-hash MinHash (cross-engine reproducible, VERDICT r12 #1) --
+# --- Hash families for banded MinHash and SimHash ----------------------
 #
-# The seeded xxhash64 family above is deterministic but has no DuckDB
-# twin, so every query built on it is rows-only. This family replaces the
-# engine hash with the repo's cross-engine construct (functions/hashing
-# spark_u32/duck_u32: first-8-md5-nibbles of the shingle as a 32-bit int)
-# composed with explicit affine permutations h_i(u) = (a_i·u + b_i) mod p,
-# p = 2^31-1 — the same published-construction discipline as the count-min
-# and explicit-HLL sketches (queries/sketches.py), which made THOSE the
-# first hash-verified approximate operators in the registry. Coefficients
-# come from a fixed LCG so both engines embed identical literals; all
-# arithmetic stays strictly inside int64 ((p-1)² < 2^63).
+# SEEDED hashes with the engine's xxhash64: cheap, but no DuckDB twin, so
+# queries on it are rows-only. EXPLICIT replaces it with the repo's
+# cross-engine construct (functions/hashing spark_u32/duck_u32: the first
+# 8 md5 nibbles of a token as a 32-bit int) composed with affine
+# permutations h_i(u) = (a_i·u + b_i) mod p, p = 2^31-1: the same
+# published-construction discipline as the count-min and explicit-HLL
+# sketches (queries/sketches.py). Coefficients come from a fixed LCG so
+# both engines embed identical literals; all arithmetic stays inside
+# int64 ((p-1)² < 2^63).
 
 _MHX_P = 2147483647
 
@@ -372,58 +330,115 @@ def _mhx_coeffs(num_hashes: int, seed: int = 977) -> list[tuple[int, int]]:
 MHX_COEFFS = _mhx_coeffs(64)
 
 
-def minhash_band_frame_explicit(
+@dataclass(frozen=True)
+class HashFamily:
+    """A stateless hash family as the Spark SQL text the signers splice
+    in; it is the only thing the seeded and explicit pipelines differ in.
+
+    - ``tag``: slot tag of the family's staged band stores;
+    - ``token``: per-shingle projection computed once as ``_u`` ahead of
+      the MinHash aggregate, or None to hash ``_sh`` directly;
+    - ``mins``: one ``min(...)`` aggregate per permutation;
+    - ``band_key``/``band_col``: a band's key over its ``_h`` columns,
+      each column wrapped in ``band_col`` first;
+    - ``halves``: a SimHash token's 64 bits as two 32-bit halves of
+      ``_t`` (high, low).
+
+    The expressions are SQL text so that a 64-column aggregate costs one
+    py4j call per column instead of one per operator node (r20: about
+    2 s of Python-side plan construction per run before the change)."""
+
+    tag: str
+    token: str | None
+    mins: tuple[str, ...]
+    band_key: str
+    band_col: str
+    halves: tuple[str, str]
+
+
+_XXH_TOKEN = "xxhash64(_t, 0)"
+_MD5_TOKEN = "md5(cast(_t as string))"
+
+# h_i(x) = xxhash64(x, 42·1000 + i); band_hash is a long
+SEEDED = HashFamily(
+    tag="mh",
+    token=None,
+    mins=tuple(f"min(xxhash64(_sh, {42000 + i}))" for i in range(64)),
+    band_key="xxhash64({})",
+    band_col="{}",
+    halves=(f"shiftrightunsigned({_XXH_TOKEN}, 32)", f"{_XXH_TOKEN} & 4294967295"),
+)
+
+# band_hash is the comma-joined minima string, exactly what the oracle's
+# ordered string_agg produces; collision semantics are full
+# sub-signature equality, the same as hashing the tuple
+EXPLICIT = HashFamily(
+    tag="mhx",
+    token=f"{spark_u32('_sh')} % {_MHX_P}",
+    mins=tuple(f"min(({a} * _u + {b}) % {_MHX_P})" for a, b in MHX_COEFFS),
+    band_key="concat_ws(',', {})",
+    band_col="cast({} AS string)",
+    halves=tuple(
+        f"cast(conv(substring({_MD5_TOKEN}, {lo}, 8), 16, 10) as bigint)"
+        for lo in (1, 9)
+    ),
+)
+
+
+def minhash_band_frame(
     df: DataFrame,
     id_col: str,
     text_col: str,
     n: int = 3,
     num_hashes: int = 64,
     band_rows: int = 4,
+    family: HashFamily = SEEDED,
 ) -> DataFrame:
-    """(id, band, band_hash): banded MinHash signatures from the EXPLICIT
-    md5+affine hash family — same stateless append-equals-rebuild contract
-    as ``minhash_band_frame`` (signatures for a batch are bit-identical to
-    a full recompute's), plus ANSI-SQL reproducibility: the DuckDB oracle
-    replays every register bit-for-bit, so queries on this frame are
-    hash-checked rather than rows-only.
+    """(id, band, band_hash): banded MinHash signatures from a STATELESS
+    hash family (no fitted model), so signatures computed for an appended
+    batch are bit-identical to what a full recompute would produce for
+    the same rows. That property is what the incremental dedup split
+    rests on: stage the corpus's band table once, then near-dup a new
+    delivery by signing ONLY the new rows and joining against the staged
+    bands (the N2 mirror of the ANN side's frozen-codebook append). With
+    ``EXPLICIT`` the DuckDB oracle replays every register, so queries on
+    the frame are hash-checked rather than rows-only.
 
-    Plan shape is identical to the seeded frame: explode distinct
-    shingles → ONE u32 projection per shingle (the md5 is computed once,
-    not once per permutation) → ``num_hashes`` codegen'd min-aggregates in
-    one hash aggregate → band assembly as a projection. ``band_hash`` is
-    the comma-joined minima string (exactly what the oracle's ordered
-    string_agg produces) — collision semantics are full sub-signature
-    equality, same as hashing the tuple."""
+    Plan: explode distinct shingles → the family's per-shingle token
+    (EXPLICIT computes the md5 once, not once per permutation) →
+    ``num_hashes`` codegen'd min-aggregates in ONE hash aggregate (a
+    doc's shingles start co-partitioned, so map-side partials reduce each
+    doc to a single row before the exchange) → band assembly is a pure
+    projection. All JVM-side.
+
+    Docs with fewer than ``n`` words have no shingles and yield no rows
+    (they cannot shingle-near-dup anything). Defaults: 64 hashes in 16
+    bands of 4 ⇒ P(candidate | J) = 1-(1-J⁴)¹⁶ ≈ 0.64 at J=0.5, 0.99 at
+    J=0.7 — the standard banding trade documented in the LSH literature.
+    """
     if num_hashes % band_rows != 0:
         raise ValueError(f"band_rows={band_rows} must divide num_hashes={num_hashes}")
-    if num_hashes > len(MHX_COEFFS):
-        raise ValueError(f"at most {len(MHX_COEFFS)} explicit permutations available")
-    from dataengineerchallenge_spark.functions.hashing import spark_u32
-
+    if num_hashes > len(family.mins):
+        raise ValueError(f"at most {len(family.mins)} permutations available")
     sh = df.select(
         F.col(id_col).alias("_id"), F.explode(word_shingles(text_col, n)).alias("_sh")
-    ).select("_id", (F.expr(spark_u32("_sh")) % _MHX_P).alias("_u"))
-    # SQL-text expression lists — one py4j call per column, not per
-    # operator node (see the seeded frame above; ~2 s/run of driver
-    # plan-construction measured before the r20 conversion). The affine
-    # literals are Python ints < 2^31: as SQL integer literals they
-    # promote against the BIGINT ``_u`` exactly as F.lit did, and the
-    # (p-1)² < 2^63 bound keeps every product in int64 either way.
-    mins = sh.groupBy("_id").agg(
-        *[
-            F.expr(f"min(({a} * _u + {b}) % {_MHX_P}) AS _h{i}")
-            for i, (a, b) in enumerate(MHX_COEFFS[:num_hashes])
-        ]
     )
-    n_bands = num_hashes // band_rows
+    if family.token is not None:
+        sh = sh.select("_id", F.expr(f"{family.token} AS _u"))
+    mins = sh.groupBy("_id").agg(
+        *[F.expr(f"{m} AS _h{i}") for i, m in enumerate(family.mins[:num_hashes])]
+    )
     band_structs = ", ".join(
-        "struct({b} AS band, concat_ws(',', {cols}) AS band_hash)".format(
+        "struct({b} AS band, {key} AS band_hash)".format(
             b=b,
-            cols=", ".join(
-                f"cast(_h{b * band_rows + r} AS string)" for r in range(band_rows)
+            key=family.band_key.format(
+                ", ".join(
+                    family.band_col.format(f"_h{b * band_rows + r}")
+                    for r in range(band_rows)
+                )
             ),
         )
-        for b in range(n_bands)
+        for b in range(num_hashes // band_rows)
     )
     bands = F.expr(f"array({band_structs})")
     return (
@@ -549,39 +564,45 @@ def verify_jaccard(
     )
 
 
-def simhash_frame(df: DataFrame, id_col: str, tokens: Column, id_salt: int = 0) -> DataFrame:
-    """(id, simhash) frame: 64-bit SimHash of a token-array column.
+def simhash_frame(
+    df: DataFrame, id_col: str, tokens: Column, family: HashFamily = SEEDED
+) -> DataFrame:
+    """(id, fa, fb) 64-bit SimHash of a token-array column, kept as TWO
+    32-bit halves (fa = high, fb = low) so no engine ever composes a
+    64-bit value that could overflow signed arithmetic (the DuckDB
+    oracle of the ``EXPLICIT`` family relies on that).
 
     Caller chooses the token space — ``word_shingles(...)`` for near-dup
     detection (unigrams are too coarse when the vocabulary is small).
 
-    Plan: explode tokens → xxhash64 once per token → one hash-aggregate
-    with 64 codegen'd ``sum(±1)`` bit-vote expressions → assemble the
-    BIGINT. Tokens of one doc start co-partitioned (they come from one
-    row), so map-side partial aggregation fully combines each doc's votes
-    before the exchange — the shuffle carries one 64-int row per doc
-    regardless of document length. All JVM-side, no Python.
+    Plan: explode tokens → the family's two 32-bit halves per token →
+    one hash-aggregate with 64 codegen'd ``sum(±1)`` bit votes → assemble
+    the halves. Tokens of one doc start co-partitioned (they come from
+    one row), so map-side partial aggregation fully combines each doc's
+    votes before the exchange — the shuffle carries one 64-int row per
+    doc regardless of document length. A vote of 0 (even token count,
+    split bits) maps to bit 0. All JVM-side, no Python.
     """
-    tok = df.select(F.col(id_col).alias("_id"), F.explode(tokens).alias("_t")).withColumn(
-        "_h", F.xxhash64("_t", F.lit(id_salt))
-    )
-    # SQL-text expression lists — one py4j call per column, not per
-    # operator node (r20; see minhash_band_frame); identical functions,
-    # identical values.
+    hi, lo = family.halves
+    tok = df.select(
+        F.col(id_col).alias("_id"), F.explode(tokens).alias("_t")
+    ).select("_id", F.expr(f"{hi} AS _ua"), F.expr(f"{lo} AS _ub"))
     votes = tok.groupBy("_id").agg(
         *[
             F.expr(
-                f"sum(cast(shiftrightunsigned(_h, {b}) & 1 AS int) * 2 - 1)"
-                f" AS _b{b}"
+                f"sum(cast(shiftrightunsigned(_u{nm}, {b}) & 1 AS int) * 2 - 1)"
+                f" AS _{nm}{b}"
             )
-            for b in range(64)
+            for nm in ("a", "b")
+            for b in range(32)
         ]
     )
-    sim = " | ".join(
-        f"shiftleft(cast(_b{b} > 0 AS long), {b})" for b in range(64)
-    )
+    fa = " + ".join(f"cast(_a{b} > 0 AS long) * {1 << b}" for b in range(32))
+    fb = " + ".join(f"cast(_b{b} > 0 AS long) * {1 << b}" for b in range(32))
     return votes.select(
-        F.col("_id").alias(id_col), F.expr(f"(cast(0 AS long) | {sim}) AS simhash")
+        F.col("_id").alias(id_col),
+        F.expr(f"({fa}) AS fa"),
+        F.expr(f"({fb}) AS fb"),
     )
 
 
@@ -875,49 +896,6 @@ def winnow_fingerprint_frame(
     )
 
 
-def simhash_frame_explicit(df: DataFrame, id_col: str, tokens: Column) -> DataFrame:
-    """(id, fa, fb) EXPLICIT SimHash — the md5 twin of ``simhash_frame``
-    (same bit-vote plan, cross-engine hash): each token's 64 bits are the
-    first 16 md5 nibbles split into two 32-bit halves, votes are ±1 sums
-    per bit, and the fingerprint is kept as TWO 32-bit halves (fa = high,
-    fb = low) so the DuckDB oracle never composes a 64-bit value that
-    could overflow signed arithmetic. A vote of 0 (even token count,
-    split bits) maps to bit 0 in both engines."""
-    m = "md5(cast(_t as string))"
-    tok = df.select(
-        F.col(id_col).alias("_id"), F.explode(tokens).alias("_t")
-    ).select(
-        "_id",
-        F.expr(f"cast(conv(substring({m}, 1, 8), 16, 10) as bigint)").alias("_ua"),
-        F.expr(f"cast(conv(substring({m}, 9, 8), 16, 10) as bigint)").alias("_ub"),
-    )
-    # SQL-text vote/assembly expressions — one py4j call per column
-    # instead of one per operator node (r20; see minhash_band_frame).
-    # shiftrightunsigned/& spell the identical functions the Column
-    # operators compiled to, so values and the oracle hash are unchanged.
-    votes = tok.groupBy("_id").agg(
-        *[
-            F.expr(
-                f"sum(cast(shiftrightunsigned(_u{nm}, {b}) & 1 AS int) * 2 - 1)"
-                f" AS _{nm}{b}"
-            )
-            for nm in ("a", "b")
-            for b in range(32)
-        ]
-    )
-    fa = " + ".join(
-        f"cast(_a{b} > 0 AS long) * {1 << b}" for b in range(32)
-    )
-    fb = " + ".join(
-        f"cast(_b{b} > 0 AS long) * {1 << b}" for b in range(32)
-    )
-    return votes.select(
-        F.col("_id").alias(id_col),
-        F.expr(f"({fa}) AS fa"),
-        F.expr(f"({fb}) AS fb"),
-    )
-
-
 def banded_hamming_pairs(
     sh: DataFrame, max_hamming: int = 3, other: DataFrame | None = None
 ) -> DataFrame:
@@ -930,13 +908,12 @@ def banded_hamming_pairs(
     matches exactly), never all-pairs — and candidates verify with the
     exact ``bit_count(xor)`` hamming sum over both halves.
 
-    Extracted (r15) from the SimHash join so ANY 64-bit
-    fingerprint source shares one banding/verify plan: text SimHash
-    (`simhash_near_dup_pairs_explicit`) and the perceptual payload
-    aHash (`operators/multimodal.py:payload_ahash` — the image/audio
-    near-dup member of the N5 family). For ``max_hamming`` > 3 the
-    banding degrades to a recall-limited candidate generator (standard
-    SimHash practice, documented on the seeded variant).
+    ANY 64-bit fingerprint source shares this one banding/verify plan:
+    text SimHash (``simhash_near_dup_pairs``, both hash families) and the
+    perceptual payload aHash (`operators/multimodal.py:payload_ahash` —
+    the image/audio near-dup member of the N5 family). For
+    ``max_hamming`` > 3 the banding degrades to a recall-limited
+    candidate generator (standard SimHash practice).
 
     ``other`` (r15) switches to the two-sided INCREMENTAL form (the
     ``band_collision_pairs`` bands_b pattern): only pairs between a
@@ -1002,132 +979,25 @@ def banded_hamming_pairs(
     )
 
 
-def simhash_near_dup_pairs_explicit(
-    df: DataFrame, id_col: str, text_col: str, max_hamming: int = 3, n: int = 3
+def simhash_near_dup_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    max_hamming: int = 3,
+    n: int = 3,
+    family: HashFamily = SEEDED,
 ) -> DataFrame:
-    """Explicit-SimHash near-dup self-join: 16-bit banding over the two
-    32-bit fingerprint halves (4 bands — LOSSLESS for hamming ≤ 3 by
-    pigeonhole), hamming verified as the sum of the two halves'
-    bit_count(xor). Same plan as the seeded variant; every value is
+    """SimHash near-dup self-join over ``n``-word shingles: ``simhash_frame``
+    signs each doc, ``banded_hamming_pairs`` finds and verifies the pairs
+    (four 16-bit bands, LOSSLESS for hamming ≤ 3 by pigeonhole; a hash
+    join, never all-pairs). With ``EXPLICIT`` every value is
     ANSI-reproducible, so the DuckDB oracle can be the NAIVE all-pairs
     hamming join — hash equality then also proves the banding lossless
-    on real data (the fuzzy_part_name_matches anchor discipline).
-    Banding/verify live in ``banded_hamming_pairs`` (shared with the
-    perceptual payload-hash family since r15)."""
-    sh = simhash_frame_explicit(spread(df), id_col, word_shingles(text_col, n)).select(
+    on real data. Returns (id_a, id_b, hamming) with id_a < id_b."""
+    sh = simhash_frame(spread(df), id_col, word_shingles(text_col, n), family).select(
         F.col(id_col).alias("_id"), "fa", "fb"
     )
     return banded_hamming_pairs(sh, max_hamming)
-
-
-def simhash_near_dup_pairs(
-    df: DataFrame, id_col: str, text_col: str, max_hamming: int = 8, n: int = 3
-) -> DataFrame:
-    """SimHash near-dup self-join with 16-bit banding (N2 scale variant).
-
-    A pair within hamming distance ≤ 3 of 64 bits must agree exactly on at
-    least one of four 16-bit bands (pigeonhole); for larger ``max_hamming``
-    banding is a recall-limited candidate generator (documented, standard
-    SimHash practice). The self-join key is (band_index, band_value) — a
-    hash join, never all-pairs. Verification re-checks true hamming
-    distance via bit_count(xor).
-    """
-    sh = simhash_frame(spread(df), id_col, word_shingles(text_col, n)).select(
-        F.col(id_col).alias("_id"), F.col("simhash").alias("_sim")
-    )
-    bands = sh.select(
-        "_id",
-        "_sim",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftrightunsigned("_sim", 16 * i).bitwiseAND(F.lit(0xFFFF)).alias("val"),
-                    )
-                    for i in range(4)
-                ]
-            )
-        ).alias("_band"),
-    ).select("_id", "_sim", "_band.band", "_band.val")
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.val") == F.col("b.val"))
-            & (F.col("a._id") < F.col("b._id")),
-        )
-        .select(
-            F.col("a._id").alias("id_a"),
-            F.col("b._id").alias("id_b"),
-            F.col("a._sim").alias("_sa"),
-            F.col("b._sim").alias("_sb"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    return (
-        cand.withColumn("hamming", F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb"))))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
-
-
-def connected_components(
-    pairs: DataFrame, src: str = "id_a", dst: str = "id_b", max_iter: int = 25
-) -> DataFrame:
-    """(node, comp) connected components of an undirected pair graph —
-    the clustering step that turns near-dup PAIRS into dedup GROUPS
-    (N1/N2 downstream: pick one survivor per component, drop the rest).
-
-    Iterative min-label propagation, all DataFrame ops: each round every
-    node takes the min label over itself and its neighbors; a fixpoint is
-    reached after diameter+1 rounds. The per-round plan is one shuffle
-    (edges ⋈ labels on src) plus one hash aggregate, with
-    ``localCheckpoint`` truncating the lineage so round N's plan does not
-    replay rounds 1..N-1.
-
-    Scale stance: near-dup components are dense and tiny (dups of a doc
-    are dups of each other), so the diameter — and the round count — is
-    small at any corpus size; the per-round cost is one hash join on the
-    edge list. For adversarial high-diameter graphs the alternating
-    large-star/small-star scheme (Kiveris et al., "Connected Components
-    in MapReduce and Beyond") converges in O(log n) rounds with the same
-    per-round primitives; the convergence counter below makes the swap a
-    drop-in. The driver-side loop is a fixpoint test (one scalar count
-    per round), never a data collect.
-
-    r14 status (VERDICT r13 #1): every registered dedup/graph consumer
-    now runs ``operators/graph.py:connected_components_star`` (identical
-    min-id labels, O(log n) rounds on any topology); this operator is
-    retained as the small-diameter comparison rung — its chain-graph
-    crossover vs star contraction is measured in BENCH_graph.json and
-    its label parity is pinned in tests/test_graph.py.
-    """
-    e = pairs.select(F.col(src).cast("long").alias("src"), F.col(dst).cast("long").alias("dst"))
-    edges = (
-        e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=True)  # scanned every round: materialize once
-    )
-    labels = edges.select(F.col("src").alias("node")).distinct().withColumn("comp", F.col("node"))
-    for _ in range(max_iter):
-        msgs = edges.join(labels, edges["src"] == labels["node"]).select(
-            F.col("dst").alias("node"), F.col("comp")
-        )
-        new = (
-            msgs.unionByName(labels.select("node", "comp"))
-            .groupBy("node")
-            .agg(F.min("comp").alias("comp"))
-            .localCheckpoint(eager=True)
-        )
-        # labels only ever decrease, so any strict drop means "not converged"
-        prev = labels.select("node", F.col("comp").alias("_prev"))
-        changed = new.join(prev, "node").where(F.col("comp") < F.col("_prev")).limit(1).count()
-        labels = new
-        if changed == 0:
-            break
-    return labels
 
 
 def edit_distance_join(

@@ -207,9 +207,9 @@ def ahash_batches(codec: str = "fake"):
     so there is no summation-order or rounding drift for a DuckDB twin
     to disagree with. Bits pack into two 32-bit halves (fa = segments
     0-31, fb = 32-63), the same signed-overflow-safe composition as
-    ``simhash_frame_explicit``. Payloads shorter than 64 bytes have no
-    stable 64-segment signature and are skipped (both engines filter
-    on the same bound)."""
+    ``operators/dedup.py:simhash_frame``. Payloads shorter than 64
+    bytes have no stable 64-segment signature and are skipped (both
+    engines filter on the same bound)."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -1,6 +1,8 @@
 """Dedup operator invariants (N1/N2): exact keep-first semantics, and
 recall of the approximate (MinHash, SimHash) paths vs the exact
-shingle-Jaccard anchor on the fixture's planted near-dups."""
+shingle-Jaccard anchor on the fixture's planted near-dups. The
+explicit hash family's twins of the seeded pins are in
+tests/test_dedup_r13.py."""
 
 from __future__ import annotations
 
@@ -125,13 +127,21 @@ def test_embedding_near_dup_exact_and_lsh_agree(spark, qs):
     assert lsh == exact
 
 
+def _components(pairs):
+    """Dedup clustering of a near-dup pair frame: star-contraction
+    connected components (component = min doc id)."""
+    from dataengineerchallenge_spark.operators.graph import connected_components_star
+
+    return connected_components_star(pairs, src="id_a", dst="id_b")
+
+
 def test_connected_components_chain_and_pair(spark):
-    """A 5-node chain (diameter 4 — forces several propagation rounds),
+    """A 5-node chain (diameter 4 — forces several contraction rounds),
     an isolated pair, and an untouched node (absent from output)."""
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11)], "id_a long, id_b long"
     )
-    comp = {r["node"]: r["comp"] for r in D.connected_components(pairs).collect()}
+    comp = {r["node"]: r["component"] for r in _components(pairs).collect()}
     assert comp == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10}
 
 
@@ -139,13 +149,13 @@ def test_connected_components_merges_via_shared_node(spark):
     """Two pair-clusters sharing one doc collapse into one component,
     regardless of edge direction/order."""
     pairs = spark.createDataFrame([(7, 3), (3, 9), (20, 7)], "id_a long, id_b long")
-    comp = {r["node"]: r["comp"] for r in D.connected_components(pairs).collect()}
+    comp = {r["node"]: r["component"] for r in _components(pairs).collect()}
     assert comp == {3: 3, 7: 3, 9: 3, 20: 3}
 
 
 def test_connected_components_empty(spark):
     pairs = spark.createDataFrame([], "id_a long, id_b long")
-    assert D.connected_components(pairs).count() == 0
+    assert _components(pairs).count() == 0
 
 
 # --- exact edit-distance join (EDJoin prefix filter) -------------------
@@ -344,6 +354,43 @@ def test_minhash_band_frame_partition_and_order_invariant(spark):
     assert short_ids.isdisjoint({r[0] for r in b1})
 
 
+def test_explicit_band_frame_parity_with_seeded_family(spark):
+    """Band-level parity between the families: for the same corpus the
+    two frames must cover the SAME (doc, band) row space — identical docs
+    signed, identical 16-band structure per doc — and within each family
+    a band's sub-signature must be a pure function of the shingle set
+    (two docs with identical text always collide on every band)."""
+    from dataengineerchallenge_spark.sources.tables import load_table
+
+    docs = load_table(spark, SF_DIR, "documents").limit(80)
+    twin = docs.selectExpr("doc_id + 100000 AS doc_id", "text")
+    corpus = docs.select("doc_id", "text").unionByName(twin)
+    seeded = D.minhash_band_frame(corpus, "doc_id", "text", n=3)
+    explicit = D.minhash_band_frame(corpus, "doc_id", "text", n=3, family=D.EXPLICIT)
+    s_rows = {(r["doc_id"], r["band"]) for r in seeded.collect()}
+    x_rows = {(r["doc_id"], r["band"]) for r in explicit.collect()}
+    assert s_rows == x_rows  # same docs signed, same band structure
+    for frame in (seeded, explicit):
+        sig = {
+            (r["doc_id"], r["band"]): r["band_hash"] for r in frame.collect()
+        }
+        originals = {k[0] for k in sig if k[0] < 100000}
+        assert originals
+        for doc_id in originals:
+            for band in range(16):
+                assert sig[(doc_id, band)] == sig[(doc_id + 100000, band)]
+
+
+def test_explicit_coeffs_are_valid_permutation_params():
+    """a_i must be nonzero mod p (a=0 would collapse a permutation to the
+    constant b) and the 64 (a, b) draws must be distinct."""
+    assert len(D.MHX_COEFFS) == 64
+    assert len(set(D.MHX_COEFFS)) == 64
+    for a, b in D.MHX_COEFFS:
+        assert 1 <= a < D._MHX_P
+        assert 0 <= b < D._MHX_P
+
+
 def test_leakage_safe_split_never_straddles_pairs(spark, qs):
     """The split's defining invariant: every exact >=0.5-Jaccard pair
     lands on ONE side (no train/test leakage through near-copies), the
@@ -470,22 +517,25 @@ def test_bigbatch_incremental_parity_and_bucket_local_store(spark, qs):
     )
     from dataengineerchallenge_spark.queries.dedup import (
         _MH_N,
+        _delivery_near_dups,
         stage_bucketed_band_store,
     )
     from dataengineerchallenge_spark.sources.tables import load_table, spread
 
-    # direct import: the seeded bigbatch rung was retired from the
-    # registry in r14 (its shape is value-verified by the explicit twin)
-    from dataengineerchallenge_spark.queries.dedup import (
-        near_dup_incremental_minhash_bigbatch,
-    )
-
     broadcast_path = sorted(
         tuple(r) for r in qs["near_dup_incremental_minhash"](spark, SF_DIR).collect()
     )
+    # the seeded family through the shuffle-mode body the registered
+    # near_dup_incremental_minhash_bigbatch_explicit runs
     bigbatch = sorted(
         tuple(r)
-        for r in near_dup_incremental_minhash_bigbatch(spark, SF_DIR).collect()
+        for r in _delivery_near_dups(
+            spark,
+            SF_DIR,
+            spark.table(stage_bucketed_band_store(spark, SF_DIR)),
+            D.SEEDED,
+            mode="shuffle",
+        ).collect()
     )
     assert bigbatch == broadcast_path and len(bigbatch) > 0
 
@@ -530,15 +580,19 @@ def test_second_delivery_equals_full_recompute(spark, qs):
         for r in qs["near_dup_banded_minhash"](spark, SF_DIR).collect()
     }
     full_d2 = {(a, b, j) for a, b, j in full if a >= split2 or b >= split2}
-    # direct import: retired from the registry in r14 (superseded by the
-    # hash-verified explicit twin), still the seeded library path
+    # the seeded family through the body the registered
+    # near_dup_second_delivery_minhash_explicit runs
     from dataengineerchallenge_spark.queries.dedup import (
-        near_dup_second_delivery_minhash,
+        _delivery_near_dups,
+        _staged_minhash_bands_appended,
     )
 
+    store = spark.read.parquet(
+        _staged_minhash_bands_appended(spark, SF_DIR, base=(3, 5), hi=(4, 5))
+    )
     got = {
         (r["id_a"], r["id_b"], r["jaccard"])
-        for r in near_dup_second_delivery_minhash(spark, SF_DIR).collect()
+        for r in _delivery_near_dups(spark, SF_DIR, store, D.SEEDED).collect()
     }
     assert got == full_d2
     assert len(got) > 0

@@ -1,9 +1,10 @@
-"""Round-13 explicit-hash MinHash pins (VERDICT r12 next-round #1): the
-md5+affine banded family must behave exactly like the seeded xxhash64
-family — every output pair true, healthy recall vs the exact anchor,
-band-level parity of the banding structure, and exact
+"""Explicit-hash MinHash and SimHash pins: the md5+affine family
+(``D.EXPLICIT``) must behave exactly like the seeded xxhash64 family
+pinned in tests/test_dedup.py — every output pair true, healthy recall
+vs the exact anchor, partition-independent signatures and exact
 incremental-equals-full-recompute — while being DuckDB-reproducible
-(the hash-green rows in LOCALCHECK_r13 are the other half of this pin)."""
+(its hash-green oracle rows are the other half of the pin). The
+family-parity and coefficient pins live in tests/test_dedup.py."""
 
 from __future__ import annotations
 
@@ -39,32 +40,6 @@ def test_explicit_banded_pairs_subset_of_exact_with_recall(spark, qs):
     assert recall >= 0.6, f"explicit banded MinHash recall {recall:.2f}"
 
 
-def test_explicit_band_frame_parity_with_seeded_family(spark):
-    """Band-level parity with the seeded family (the judge's named pin):
-    for the same corpus the two frames must cover the SAME (doc, band)
-    row space — identical docs signed, identical 16-band structure per
-    doc — and within each family a band's sub-signature must be a pure
-    function of the shingle set (two docs with identical text always
-    collide on every band, in BOTH families)."""
-    docs = load_table(spark, SF_DIR, "documents").limit(80)
-    twin = docs.selectExpr("doc_id + 100000 AS doc_id", "text")
-    corpus = docs.select("doc_id", "text").unionByName(twin)
-    seeded = D.minhash_band_frame(corpus, "doc_id", "text", n=3)
-    explicit = D.minhash_band_frame_explicit(corpus, "doc_id", "text", n=3)
-    s_rows = {(r["doc_id"], r["band"]) for r in seeded.collect()}
-    x_rows = {(r["doc_id"], r["band"]) for r in explicit.collect()}
-    assert s_rows == x_rows  # same docs signed, same band structure
-    for frame in (seeded, explicit):
-        sig = {
-            (r["doc_id"], r["band"]): r["band_hash"] for r in frame.collect()
-        }
-        originals = {k[0] for k in sig if k[0] < 100000}
-        assert originals
-        for doc_id in originals:
-            for band in range(16):
-                assert sig[(doc_id, band)] == sig[(doc_id + 100000, band)]
-
-
 def test_explicit_incremental_equals_full_recompute(spark, qs):
     """Stateless family ⇒ signing only the delivery and joining the
     staged base bands equals the full-corpus run restricted to pairs
@@ -88,52 +63,31 @@ def test_explicit_band_frame_deterministic_across_builds(spark):
     identical frame — no partition-order or engine-seed dependence (the
     property that makes the DuckDB oracle possible at all)."""
     docs = load_table(spark, SF_DIR, "documents").limit(60)
-    f1 = D.minhash_band_frame_explicit(docs, "doc_id", "text", n=3).collect()
-    f2 = D.minhash_band_frame_explicit(
-        docs.repartition(7, "doc_id"), "doc_id", "text", n=3
+    f1 = D.minhash_band_frame(docs, "doc_id", "text", n=3, family=D.EXPLICIT).collect()
+    f2 = D.minhash_band_frame(
+        docs.repartition(7, "doc_id"), "doc_id", "text", n=3, family=D.EXPLICIT
     ).collect()
     assert sorted(map(tuple, f1)) == sorted(map(tuple, f2))
-
-
-def test_explicit_coeffs_are_valid_permutation_params():
-    """a_i must be nonzero mod p (a=0 would collapse a permutation to the
-    constant b) and the 64 (a, b) draws must be distinct."""
-    assert len(D.MHX_COEFFS) == 64
-    assert len(set(D.MHX_COEFFS)) == 64
-    for a, b in D.MHX_COEFFS:
-        assert 1 <= a < D._MHX_P
-        assert 0 <= b < D._MHX_P
 
 
 def test_explicit_stream_serve_multibatch_parity(spark, qs):
     """The hash-verified online loop must genuinely drain as multiple
     micro-batches AND emit exactly the explicit incremental batch rung's
     pairs — stream≡batch under real slicing, the same contract the
-    seeded family pins, now value-checkable end to end."""
-    from dataengineerchallenge_spark.operators import dedup as D
+    seeded family pins, here value-checkable end to end."""
     from dataengineerchallenge_spark.queries.dedup import (
-        _MH_BAND_ROWS,
-        _MH_HASHES,
-        _MH_N,
         _staged_delivery_stream,
-        _staged_minhash_bands_explicit,
+        _staged_minhash_bands,
         _stream_near_dup_serve,
     )
-    from dataengineerchallenge_spark.sources.tables import load_table, spread
+    from dataengineerchallenge_spark.sources.tables import spread
 
-    store = _staged_minhash_bands_explicit(spark, SF_DIR)
+    store = _staged_minhash_bands(spark, SF_DIR, family=D.EXPLICIT)
     payload = _staged_delivery_stream(spark, SF_DIR)
     docs = spread(load_table(spark, SF_DIR, "documents"))
     epochs: list = []
-
-    def band_fn(df):
-        return D.minhash_band_frame_explicit(
-            df, "doc_id", "text", n=_MH_N,
-            num_hashes=_MH_HASHES, band_rows=_MH_BAND_ROWS,
-        )
-
     streamed = _stream_near_dup_serve(
-        spark, store, payload, docs, epochs=epochs, band_fn=band_fn
+        spark, store, payload, docs, epochs=epochs, family=D.EXPLICIT
     )
     assert len(epochs) >= 2, f"expected multi-micro-batch drain, got {epochs}"
     got = {tuple(r) for r in streamed.collect()}
@@ -152,10 +106,6 @@ def test_explicit_simhash_identical_texts_and_precision(spark, qs):
     shingle-Jaccard >= 0.3 pair (the seeded rung's precision check,
     looser than the 0.5 near-dup bar because hamming and Jaccard are
     different similarity geometries)."""
-    from dataengineerchallenge_spark.operators.dedup import (
-        simhash_near_dup_pairs_explicit,
-    )
-
     df = spark.createDataFrame(
         [(1, "alpha beta gamma delta epsilon zeta"),
          (2, "alpha beta gamma delta epsilon zeta"),
@@ -164,7 +114,7 @@ def test_explicit_simhash_identical_texts_and_precision(spark, qs):
     )
     got = {
         (r["id_a"], r["id_b"], r["hamming"])
-        for r in simhash_near_dup_pairs_explicit(df, "doc_id", "text").collect()
+        for r in D.simhash_near_dup_pairs(df, "doc_id", "text", family=D.EXPLICIT).collect()
     }
     assert (1, 2, 0) in got
     assert all(h == 0 or (a, b) != (1, 2) for a, b, h in got)

@@ -233,23 +233,30 @@ def test_star_cc_distinct_pairs_promise_identical(spark):
 
 
 def test_star_cc_agrees_with_min_label_on_near_dup_graph(spark):
-    """Drop-in parity with the dedup clustering backbone: on the actual
-    near-dup pair graph (where min-label's small-diameter assumption
-    holds) both operators emit identical (node, component) labels."""
-    from dataengineerchallenge_spark.operators.dedup import (
-        connected_components,
-    )
+    """Drop-in parity with the dedup clustering contract: on the actual
+    near-dup pair graph, star CC's (node, component) labels equal an
+    independent reference — a pure-Python union-find over the collected
+    pairs that labels each component by its minimum node id."""
     from dataengineerchallenge_spark.registry import queries
 
     pairs = queries()["near_dup_jaccard"](spark, SF_SMOKE).select("id_a", "id_b")
-    ml = {
-        (r["node"], r["comp"]) for r in connected_components(pairs).collect()
-    }
+    parent: dict = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for r in pairs.collect():
+        ra, rb = find(r["id_a"]), find(r["id_b"])
+        parent[max(ra, rb)] = min(ra, rb)
+    ref = {(node, find(node)) for node in parent}
     star = {
         (r["node"], r["component"])
         for r in _star_from_pairs(spark, pairs).collect()
     }
-    assert star == ml
+    assert star == ref
     assert len(star) > 0
 
 

@@ -129,29 +129,15 @@ def test_edit_distance_join_never_cartesian(spark, qs):
 
 
 def test_bench_headline_names_all_registered(spark, qs):
-    """Every bench.py HEADLINE name must resolve — in the registry, or
-    among the r14-retired seeded rungs bench.py injects directly (their
-    shapes are value-verified by explicit twins; the seeded functions
-    stay bench-timed for round-over-round continuity). A typo would
-    silently shrink the driver's comparable set."""
+    """Every bench.py HEADLINE name must resolve in the registry — a typo
+    would silently shrink the headline set bench.py times."""
     import bench
-    from dataengineerchallenge_spark.queries.dedup import (
-        near_dup_incremental_minhash_bigbatch,
-        near_dup_second_delivery_minhash,
-    )
 
-    resolvable = dict(qs)
-    resolvable.setdefault(
-        "near_dup_incremental_minhash_bigbatch",
-        near_dup_incremental_minhash_bigbatch,
-    )
-    resolvable.setdefault(
-        "near_dup_second_delivery_minhash", near_dup_second_delivery_minhash
-    )
-    missing = [n for n in bench.HEADLINE if n not in resolvable]
+    missing = [n for n in bench.HEADLINE if n not in qs]
     assert not missing, missing
-    # the retired names must NOT be back in the registry (rows-only
-    # block stays <= 25) — if they return, drop the injection above
+    # the r14-retired seeded delivery rungs must NOT be back in the
+    # registry (rows-only block stays <= 25; their shapes are
+    # value-verified by the explicit twins)
     assert "near_dup_incremental_minhash_bigbatch" not in qs
     assert "near_dup_second_delivery_minhash" not in qs
 

@@ -19,13 +19,17 @@ numpy's float32 shortest-repr, decimals (HUGEINT) as float64.
 Usage:
     python tools/check.py [sf_dir] [--json OUT.json] [query ...]
 
-Exit code 1 if any checked query fails parity.
+Exit code 1 if any checked query fails parity. ``--json`` records every
+query's ``rows_sha256``, a digest of its rendered rows, rows-only queries
+included, so the outputs of two trees can be compared value for value.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import math
+import os
 import sys
 import time
 
@@ -78,6 +82,13 @@ def render_rows(tbl: pa.Table) -> list[tuple]:
     return sorted(rows)
 
 
+def rows_sha256(column_names: list[str], rows: list[tuple]) -> str:
+    """sha256 over the sorted column names and ``render_rows``'s rows:
+    independent of row and column order, changed by any single cell."""
+    payload = json.dumps([sorted(column_names), rows], ensure_ascii=False)
+    return hashlib.sha256(payload.encode()).hexdigest()
+
+
 def main() -> int:
     args = [a for a in sys.argv[1:]]
     out_json = None
@@ -91,12 +102,10 @@ def main() -> int:
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     # full-registry sweeps at sf0.1 exhaust the 1g default local driver
     # heap (two OOMs at the trailing graph queries under concurrency);
     # same pre-JVM idiom as bench.py / tools/bench_*.py
-    import os
-
     os.environ.setdefault("PYSPARK_SUBMIT_ARGS", "--driver-memory 8g pyspark-shell")
     import __spark_entry__ as e
 
@@ -137,6 +146,8 @@ def main() -> int:
             n_fail += 1
             continue
         rec["spark_rows"] = s_tbl.num_rows
+        s_rows = render_rows(s_tbl)
+        rec["rows_sha256"] = rows_sha256(s_tbl.column_names, s_rows)
         if name not in oracles:
             rec["rows_only"] = True
             report[name] = rec
@@ -163,7 +174,7 @@ def main() -> int:
                 f" duckdb={sorted(d_tbl.column_names)}"
             )
         if ok:
-            s_rows, d_rows = render_rows(s_tbl), render_rows(d_tbl)
+            d_rows = render_rows(d_tbl)
             rec["hash_match"] = s_rows == d_rows
             if not rec["hash_match"]:
                 diffs = [(a, b) for a, b in zip(s_rows, d_rows) if a != b][:3]
