@@ -950,6 +950,15 @@ def banded_hamming_pairs(
         if other is not None
         else F.col("a._id") < F.col("b._id")
     )
+    if other is not None:
+        ids = [
+            F.least("a._id", "b._id").alias("id_a"),
+            F.greatest("a._id", "b._id").alias("id_b"),
+        ]
+    else:
+        # a._id < b._id already orders the pair; least/greatest would hide
+        # the stream side's _id partitioning and cost the dedup a shuffle
+        ids = [F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b")]
     cand = (
         a.join(
             b,
@@ -958,8 +967,7 @@ def banded_hamming_pairs(
             & id_pred,
         )
         .select(
-            F.least("a._id", "b._id").alias("id_a"),
-            F.greatest("a._id", "b._id").alias("id_b"),
+            *ids,
             # hamming is symmetric, so which side's halves land in which
             # slot doesn't matter after canonicalization
             F.col("a.fa").alias("_faa"),

@@ -12,6 +12,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -61,5 +63,17 @@ def get_spark(
         # read as bigint nanos, converted in sources/tables.py (floor to µs,
         # matching DuckDB's ns->µs truncation; FIXTURES.md caveat)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Janino's cache is keyed on (class loader, source), and local mode's
+        # driver and task threads use two loaders, so each generated class
+        # takes two entries: curation's 4 queries need 103-107, over Spark's
+        # cap of 100, and every warm pass recompiled 32-58 classes in LRU order.
+        # A static conf: only the builder can set it.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # CPython < 3.12 re-reads pyspark.zip's directory once per zip
+        # importer (16 per task) on every task's invalidate_caches(); the
+        # engine's daemon re-reads it only when the archive changed
+        .config("spark.python.daemon.module", "dataengineerchallenge_spark.pydaemon")
+        # ...so every worker imports this package, from any cwd
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     return builder.getOrCreate()

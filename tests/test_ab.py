@@ -1,4 +1,4 @@
-"""tools/ab.py's command-line parser (no Spark needed).
+"""tools/ab.py: its command-line parser (no Spark needed) and its samples.
 
 ``tools/ab.py`` replaces the per-conf A/B scripts. These commands re-run
 their query lists, with ``SPARK_GRAFT_SF_DIR=$SF01`` set and ``$SF01`` /
@@ -62,6 +62,7 @@ per-layer counters.
 
 from __future__ import annotations
 
+import itertools
 import os
 import re
 import shlex
@@ -73,7 +74,7 @@ sys.path.insert(
     0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
 )
 
-from ab import parse_args  # noqa: E402
+from ab import parse_args, sample, summary  # noqa: E402
 
 NAMES = {"q1", "q2"}
 
@@ -120,3 +121,23 @@ def test_retired_script_commands_parse(monkeypatch):
     for cmd in cmds:
         argv = shlex.split(cmd.replace("$SF001", "/sf001"))
         assert parse_args(argv, names).cases
+
+
+def test_samples_record_janino_compiles(spark):
+    key = "spark.graft.test.abCompiles"
+    fresh = itertools.count(1000)
+
+    def stable(spark, _sf):
+        return spark.range(10).selectExpr("id * 3 AS x")
+
+    def new_code(spark, _sf):  # a new literal is new generated source
+        return spark.range(10).selectExpr(f"id * {next(fresh)} AS x")
+
+    rec = sample(spark, stable, "/sf", key, ["a", "b"], 2)
+    assert rec["compiles"] == {"a": [0, 0], "b": [0, 0]}
+    assert spark.conf.get(key, None) is None
+    line = summary("q1", rec)
+    assert line.startswith("q1 a=") and line.endswith("s/0 compiles")
+
+    rec = sample(spark, new_code, "/sf", key, ["a", "b"], 2)
+    assert all(c >= 1 for cs in rec["compiles"].values() for c in cs)

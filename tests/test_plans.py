@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pyspark.sql.functions as F
 import pytest
@@ -54,6 +55,15 @@ def test_similarity_joins_never_cartesian(spark, qs):
         plan = explain_str(qs[name](spark, SF_DIR))
         assert "CartesianProduct" not in plan, name
         assert "BroadcastNestedLoopJoin" not in plan, name
+
+
+def test_one_sided_simhash_pairs_dedup_without_a_shuffle(spark, qs):
+    """The self-join's a._id < b._id already orders each pair, so the
+    pair dedup reuses the join's partitioning (least/greatest cost a third
+    exchange)."""
+    for name in ("simhash_near_dups", "simhash_near_dups_explicit"):
+        plan = qs[name](spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
+        assert len(re.findall(r"Exchange (?:hash|range|Single)", plan)) == 2, name
 
 
 def test_parquet_filter_pushdown_and_column_pruning(spark):
@@ -153,8 +163,6 @@ def test_serve_rungs_hold_two_shuffle_budget(spark, qs):
         _staged_ivfpq_index,
         _staged_ivfpq_residual_index,
     )
-
-    import re
 
     _staged_ivfpq_index(spark, SF_DIR)
     _staged_ivfpq_residual_index(spark, SF_DIR)

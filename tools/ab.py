@@ -11,8 +11,16 @@ unset afterwards, so a query's later samples and the next query start
 from the session default. Wall time on a shared box drifts, so compare
 the values only within one run, never across runs.
 
+Each sample also records the Janino compiles it caused (the delta of
+``CodegenMetrics.METRIC_COMPILATION_TIME``'s count), so a conf that
+changes generated code shows its recompiles beside its time.
+
 Queries inside a perfbench workload are better A/B'd across checkouts
 with ``perfbench/spread.py``, which also reads the per-layer counters.
+So is a static conf (``spark.sql.codegen.cache.maxEntries``,
+``spark.python.daemon.module``): it is fixed when the session starts, so
+one session cannot alternate it; run ``perfbench/spread.py --root
+../parent --root .`` over two checkouts that differ in it.
 """
 
 from __future__ import annotations
@@ -60,30 +68,48 @@ def parse_args(argv: list[str], names) -> argparse.Namespace:
     return a
 
 
+def janino_compiles(spark) -> int:
+    """Classes Janino has compiled in this JVM so far."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def sample(spark, fn, sf_dir: str, key: str, values: list[str], n: int) -> dict:
     """Untimed warm-up of ``fn(spark, sf_dir)``, then ``n`` rounds that
     each time it once under every value of ``key``. Returns
-    ``{"samples_s": {value: [s, ...]}, "median_s": {value: s}}``. The
-    conf is unset on every exit."""
+    ``{"samples_s": {value: [s, ...]}, "median_s": {value: s},
+    "compiles": {value: [count, ...]}}``. The conf is unset on every
+    exit."""
 
     def run() -> None:
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
 
     run()
     samples: dict[str, list[float]] = {v: [] for v in values}
+    compiles: dict[str, list[int]] = {v: [] for v in values}
     try:
         for _ in range(n):
             for v in values:
                 spark.conf.set(key, v)
-                t0 = time.time()
+                c0, t0 = janino_compiles(spark), time.time()
                 run()
                 samples[v].append(round(time.time() - t0, 3))
+                compiles[v].append(janino_compiles(spark) - c0)
     finally:
         spark.conf.unset(key)
     return {
         "samples_s": samples,
         "median_s": {v: round(statistics.median(s), 3) for v, s in samples.items()},
+        "compiles": compiles,
     }
+
+
+def summary(name: str, rec: dict) -> str:
+    """The printed line of one query: each value's median time and the
+    Janino compiles its samples caused."""
+    return f"{name} " + " vs ".join(
+        f"{v}={m}s/{sum(rec['compiles'][v])} compiles" for v, m in rec["median_s"].items()
+    )
 
 
 def main(argv: list[str]) -> None:
@@ -112,8 +138,7 @@ def main(argv: list[str]) -> None:
     for name, sf in a.cases:
         rec = {"sf_dir": sf, **sample(spark, qs[name], sf, a.key, a.values, a.samples)}
         doc["queries"][f"{name}@{sf}"] = rec
-        print(name, " vs ".join(f"{v}={m}" for v, m in rec["median_s"].items()),
-              flush=True)
+        print(summary(name, rec), flush=True)
         if a.out:  # flushed per query: a run killed mid-way keeps what it measured
             with open(a.out, "w") as f:
                 json.dump(doc, f, indent=1)
