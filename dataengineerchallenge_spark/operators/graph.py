@@ -23,9 +23,15 @@ Scale shape (100 TB edge set):
   shuffles of ~|V|-per-partition combined rows save); it becomes the
   right trade only when per-iteration shuffled volume, not the one-time
   layout pass, dominates — i.e. much larger |V| or many more iterations.
-- Plan depth grows linearly with iterations; past ~10 iterations
-  checkpoint/localCheckpoint the rank frame to cut lineage (here the
-  fixed 5 iterations stay well within planner comfort).
+- One rule for every Python-side round loop, enforced by two helpers: the
+  loop-invariant edge projection lives in a ``_loop_cache`` scope
+  (persisted, laid out once, every cached copy unpersisted on ANY exit),
+  and ``_iterate`` runs the rounds — each round's frame is a
+  localCheckpoint (lineage cut, plan depth constant), a convergence
+  fingerprint is the round's ONE action, and round N-1's checkpoint
+  blocks are released once round N is materialized. Only the unrolled
+  fixed-iteration pagerank plan keeps a lazy chain (5 iterations stay
+  well within planner comfort).
 - Dangling nodes (no out-edges) leak rank mass; ``pagerank`` with
   ``dangling=True`` (r13) redistributes the dangling sum uniformly each
   iteration, conserving total mass on arbitrary directed graphs. For
@@ -36,6 +42,10 @@ Scale shape (100 TB edge set):
 
 from __future__ import annotations
 
+from contextlib import ExitStack, contextmanager
+from functools import reduce
+
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -179,26 +189,130 @@ def _keyed(e_cached: DataFrame, n_rows: int, key: str):
     join side: otherwise AQE may broadcast the edge cache itself and
     discard the layout.
     """
-    from pyspark import StorageLevel
-
     spark = e_cached.sparkSession
     cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
     k = max(1, min(cap, -(-n_rows // _LOOP_CACHE_ROWS_PER_PART)))
     return e_cached.repartition(k, key).persist(StorageLevel.MEMORY_AND_DISK)
 
 
-def _explode_members(spark) -> bool:
-    """Dial for the triangle-family duplicated-subtree fix (r20 session
-    4, guide §2.4): ``true`` (default) emits a triangle's three
-    corners/sides via one ``explode(array(...))`` pass over the
-    enumeration join; ``false`` restores the legacy 3-way UNION whose
-    executed plan re-ran the wedge + closing joins once per branch
-    (only the exchanges were reused). Values are identical either way —
-    the union IS union-all, so both forms produce the same row
-    multiset; only the plan shape differs. A/B it with tools/ab.py."""
-    return (
-        spark.conf.get("spark.graft.graph.explodeMembers", "true") == "true"
-    )
+@contextmanager
+def _loop_cache(e: DataFrame, layout: str | None = None, key: str | None = None, aggs=()):
+    """Scope of a loop's invariant edge projection ``e``: persist it, lay
+    it out once for the rounds, yield ``(frame, row)``, and unpersist
+    every cached copy in ``finally`` — a normal return, an exhausted
+    round budget and any other error alike (an unreleased loop cache
+    outlives the query for the whole session).
+
+    ``layout``:
+    - ``None``: ``e`` as given (already laid out, e.g. ``_stats_keyed``);
+      no action, ``row`` is None.
+    - ``"stats"``: ``_stats_keyed(e, key)``, sized from plan stats; no
+      action, ``row`` is None.
+    - ``"narrow"`` / ``"keyed"``: one aggregate action over the persisted
+      frame counts it (and materializes the cache), then ``_narrowed``
+      coalesces it or ``_keyed`` lays a second copy out on ``key``.
+      ``aggs`` ride that same action; ``row`` holds them and ``n``.
+    """
+    if layout == "stats":
+        e = _stats_keyed(e, key)
+    frame = e.persist(StorageLevel.MEMORY_AND_DISK)
+    copies = [frame]
+    try:
+        row = None
+        if layout in ("narrow", "keyed"):
+            row = e.agg(F.count(F.lit(1)).alias("n"), *aggs).collect()[0]
+            if layout == "keyed":
+                frame = _keyed(e, row["n"], key)
+                copies.append(frame)
+            else:
+                frame = _narrowed(e, row["n"])
+        yield frame, row
+    finally:
+        for c in copies:
+            c.unpersist()
+
+
+def _release(df: DataFrame) -> None:
+    """Drop the blocks of a localCheckpoint-ed frame (a ``LogicalRDD``
+    root). Reading the frame afterwards fails, so release a round only
+    once nothing reads it any more."""
+    plan = df._jdf.queryExecution().logical()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
+
+
+def _rows(df: DataFrame) -> int:
+    """Row count of ``df`` as one RDD job over its partitions: no SQL
+    aggregate, so no Exchange into a single partition (the emptiness
+    fingerprint of a loop whose round frame has no other aggregate)."""
+    return df._jdf.queryExecution().toRdd().count()
+
+
+def _iterate(
+    state: DataFrame,
+    step,
+    rounds: int,
+    fingerprint=None,
+    converged=None,
+    name: str | None = None,
+    stats: dict | None = None,
+    keep: bool = False,
+):
+    """The round loop shared by the graph operators: up to ``rounds`` rounds of
+    ``state = step(state)``, each round's frame a localCheckpoint (the
+    initial ``state`` too), so plan depth stays constant.
+
+    - Fixed rounds (no ``fingerprint``): eager checkpoints.
+    - Fixpoint rounds: the checkpoint is lazy and ``fingerprint(frame)``
+      is the round's ONLY action (a one-row aggregate's ``collect``, or
+      ``_rows``), so it must read every partition and thereby
+      materialize the whole checkpoint: ``isEmpty``/``take`` may read
+      only the first partition, and Spark then runs a second job for
+      the rest. The loop stops when ``converged(fp, prev_fp)`` holds
+      (``prev_fp`` is None in round 1); without a ``converged`` it
+      stops when the fingerprint repeats, the initial state's
+      fingerprint included.
+    - Once round N is materialized, round N-1's checkpoint blocks are
+      released (``_release``), unless ``keep`` (the caller's output
+      reads every round).
+
+    Returns ``(state, rounds_run, converged)``. ``stats`` receives
+    ``rounds`` and ``converged``; when ``name`` is given, exhausting the
+    budget of a fixpoint loop raises RuntimeError naming the operator
+    (a truncated fixpoint is a wrong answer, not an approximation).
+    """
+    lazy = fingerprint is not None
+
+    def ckpt(df):
+        return df.localCheckpoint(eager=not lazy)
+
+    state = ckpt(state)
+    prev = None
+    if lazy and converged is None:
+        prev = fingerprint(state)
+    ran, done = 0, False
+    for _ in range(rounds):
+        ran += 1
+        nxt = ckpt(step(state))
+        fp = fingerprint(nxt) if lazy else None
+        if not keep:
+            _release(state)
+        state = nxt
+        if lazy:
+            done = converged(fp, prev) if converged else fp == prev
+            if done:
+                break
+            prev = fp
+    if stats is not None:
+        stats["rounds"] = ran
+        stats["converged"] = done
+    if lazy and not done and name is not None and rounds > 0:
+        raise RuntimeError(
+            f"{name} did not converge within {rounds} rounds; a "
+            f"truncated result would be silently wrong — raise the round "
+            f"budget (schedule bounds are shared with the SQL oracle)"
+        )
+    return state, ran, done
 
 
 def _seed1(spark, source, seed_t: str, col2: str, val2: int, t2: str) -> DataFrame:
@@ -254,11 +368,12 @@ def pagerank(
     iteration; the symmetric-graph callers keep the free path.
 
     ``tol`` switches from a fixed unrolled plan to CONVERGENCE-TESTED
-    iteration: each round is materialized (localCheckpoint) and the loop
-    stops once max |pr' - pr| < tol, with ``iters`` now the round CAP.
-    One extra tiny action per round — the trade a user makes when the
-    iteration count is unknown for their graph. ``stats`` (optional)
-    receives {"iterations": k, "delta": last_max_delta_or_None}.
+    iteration on ``_iterate``: each round is materialized
+    (localCheckpoint) and the loop stops once max |pr' - pr| < tol, with
+    ``iters`` now the round CAP. The max-delta aggregate is each round's
+    one action — the trade a user makes when the iteration count is
+    unknown for their graph. ``stats`` (optional) receives
+    {"iterations": k, "delta": last_max_delta_or_None}.
 
     ``teleport`` (r14) turns the computation PERSONALIZED (topic-
     sensitive PageRank, Haveliwala WWW'02 — a public design): a
@@ -290,8 +405,6 @@ def pagerank(
     publishes it once and every serve call skips the groupBy entirely.
     When omitted, it is derived from ``edges`` exactly as before.
     """
-    from pyspark import StorageLevel
-
     if weight is not None:
         # validate once at the column level (ADVICE r14): a null, zero or
         # negative weight makes W(u) null/zero and the per-edge share
@@ -352,120 +465,121 @@ def pagerank(
     # (task-time A/B: CPU 24.8 → 34.4 s, shuffle 23.5 → 32.1 MB) —
     # the wrong trade at 100 TB. Sizing shared via _stats_keyed
     # (r21: the spectral loops use the same layout).
-    eo = (
-        _stats_keyed(e, "dst")
-        .join(_bc(outdeg), "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    nodes = nodes.persist(StorageLevel.MEMORY_AND_DISK)
-    dang = None
-    n_nodes = None
-    if dangling:
-        # the dangling node set is a loop invariant too (nodes minus
-        # edge sources); |V| is one scalar read off the cached nodes
-        dang = nodes.join(
-            outdeg.select(F.col("src").alias("node")), "node", "left_anti"
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        n_nodes = nodes.count()
-
-    tele = None
-    if teleport is not None:
-        # restrict seeds to graph nodes (a seed outside the graph would
-        # silently dilute the restart mass), annotate the node frame
-        # once with the scaled restart weight — a loop invariant
-        if n_nodes is None:
-            n_nodes = nodes.count()
-        seeds = (
-            teleport.select(F.col(teleport.columns[0]).alias("node"))
-            .distinct()
-            .join(nodes, "node", "left_semi")
-            .persist(StorageLevel.MEMORY_AND_DISK)
+    with ExitStack() as scope:
+        eo, _ = scope.enter_context(
+            _loop_cache(_stats_keyed(e, "dst").join(_bc(outdeg), "src"))
         )
-        n_seeds = seeds.count()
-        if n_seeds == 0:
-            raise ValueError("personalized pagerank: no teleport seed is a graph node")
-        tele = nodes.join(
-            F.broadcast(seeds.withColumn("_s", F.lit(1))), "node", "left"
-        ).select(
-            "node",
-            F.when(F.col("_s").isNotNull(), F.lit(float(n_nodes) / n_seeds))
-            .otherwise(F.lit(0.0))
-            .alias("t"),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        seeds.unpersist()
-
-    ranks = nodes.select("node", F.lit(1.0).alias("pr"))
-    # dangling mode references `ranks` TWICE per iteration (contribution
-    # join + dangling-sum semi-join), so a lazy chain doubles the plan
-    # tree every round — 2^iters subtrees OOMed the planner at 60 lazy
-    # iterations. Materializing each round keeps the plan constant-depth
-    # and the work linear; tol mode needs the materialization anyway for
-    # its per-round delta action.
-    materialize_rounds = dangling or tol is not None
-    if materialize_rounds:
-        ranks = ranks.localCheckpoint()
-    ran, delta = 0, None
-    for _ in range(iters):
-        ran += 1
-        share = (
-            F.col("pr") * F.col("w") / F.col("outdeg")
-            if weight is not None
-            else F.col("pr") / F.col("outdeg")
-        )
-        contrib = (
-            eo.join(_bc(ranks), eo["src"] == ranks["node"])
-            .select("dst", share.alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        base = tele if tele is not None else nodes
-        nxt = base.join(_bc(contrib), base["node"] == contrib["dst"], "left")
-        inflow = F.coalesce(F.col("inflow"), F.lit(0.0))
+        nodes, _ = scope.enter_context(_loop_cache(nodes))
+        dang = None
+        n_nodes = None
         if dangling:
-            dsum = ranks.join(_bc(dang), "node", "left_semi").agg(
-                F.coalesce(F.sum("pr"), F.lit(0.0)).alias("_ds")
-            )
-            nxt = nxt.crossJoin(F.broadcast(dsum))
-            # dangling mass re-enters via the restart distribution:
-            # uniform without teleport, onto the seeds with it
-            dist = F.col("t") / F.lit(float(n_nodes)) if tele is not None else (
-                F.lit(1.0) / F.lit(float(n_nodes))
-            )
-            inflow = inflow + F.col("_ds") * dist
-        restart = F.col("t") if tele is not None else F.lit(1.0)
-        nxt = nxt.select(
-            "node",
-            (F.lit(1.0 - damping) * restart + F.lit(damping) * inflow).alias("pr"),
-        )
-        if materialize_rounds:
-            nxt = nxt.localCheckpoint()
-        if tol is not None:
-            # convergence test: max |Δpr| is one broadcast-joined
-            # aggregate over |V| rows
-            delta = (
-                nxt.join(
-                    ranks.select("node", F.col("pr").alias("_old")), "node"
+            # the dangling node set is a loop invariant too (nodes minus
+            # edge sources); |V| is one scalar read off the cached nodes
+            dang, _ = scope.enter_context(
+                _loop_cache(
+                    nodes.join(
+                        outdeg.select(F.col("src").alias("node")), "node", "left_anti"
+                    )
                 )
-                .agg(F.max(F.abs(F.col("pr") - F.col("_old"))))
-                .collect()[0][0]
             )
-            ranks = nxt
-            if delta is not None and delta < tol:
-                break
+            n_nodes = nodes.count()
+
+        tele = None
+        if teleport is not None:
+            # restrict seeds to graph nodes (a seed outside the graph would
+            # silently dilute the restart mass), annotate the node frame
+            # once with the scaled restart weight — a loop invariant
+            if n_nodes is None:
+                n_nodes = nodes.count()
+            with _loop_cache(
+                teleport.select(F.col(teleport.columns[0]).alias("node"))
+                .distinct()
+                .join(nodes, "node", "left_semi")
+            ) as (seeds, _):
+                n_seeds = seeds.count()
+                if n_seeds == 0:
+                    raise ValueError(
+                        "personalized pagerank: no teleport seed is a graph node"
+                    )
+                tele_plan = nodes.join(
+                    F.broadcast(seeds.withColumn("_s", F.lit(1))), "node", "left"
+                ).select(
+                    "node",
+                    F.when(F.col("_s").isNotNull(), F.lit(float(n_nodes) / n_seeds))
+                    .otherwise(F.lit(0.0))
+                    .alias("t"),
+                )
+            tele, _ = scope.enter_context(_loop_cache(tele_plan))
+
+        def step(ranks: DataFrame) -> DataFrame:
+            share = (
+                F.col("pr") * F.col("w") / F.col("outdeg")
+                if weight is not None
+                else F.col("pr") / F.col("outdeg")
+            )
+            contrib = (
+                eo.join(_bc(ranks), eo["src"] == ranks["node"])
+                .select("dst", share.alias("c"))
+                .groupBy("dst")
+                .agg(F.sum("c").alias("inflow"))
+            )
+            base = tele if tele is not None else nodes
+            nxt = base.join(_bc(contrib), base["node"] == contrib["dst"], "left")
+            inflow = F.coalesce(F.col("inflow"), F.lit(0.0))
+            if dangling:
+                dsum = ranks.join(_bc(dang), "node", "left_semi").agg(
+                    F.coalesce(F.sum("pr"), F.lit(0.0)).alias("_ds")
+                )
+                nxt = nxt.crossJoin(F.broadcast(dsum))
+                # dangling mass re-enters via the restart distribution:
+                # uniform without teleport, onto the seeds with it
+                dist = F.col("t") / F.lit(float(n_nodes)) if tele is not None else (
+                    F.lit(1.0) / F.lit(float(n_nodes))
+                )
+                inflow = inflow + F.col("_ds") * dist
+            restart = F.col("t") if tele is not None else F.lit(1.0)
+            nxt = nxt.select(
+                "node",
+                (F.lit(1.0 - damping) * restart + F.lit(damping) * inflow).alias("pr"),
+            )
+            if tol is not None:
+                # the previous rank rides the round's frame, so the
+                # convergence fingerprint max |Δpr| is one aggregate over it
+                nxt = nxt.join(ranks.select("node", F.col("pr").alias("_old")), "node")
+            return nxt
+
+        ranks = nodes.select("node", F.lit(1.0).alias("pr"))
+        ran, delta = iters, None
+        if tol is not None:
+
+            def converged(d, prev) -> bool:
+                nonlocal delta
+                delta = d
+                return delta is not None and delta < tol
+
+            ranks, ran, _ = _iterate(
+                ranks.withColumn("_old", F.lit(None).cast("double")),
+                step,
+                iters,
+                fingerprint=lambda r: r.agg(
+                    F.max(F.abs(F.col("pr") - F.col("_old")))
+                ).collect()[0][0],
+                converged=converged,
+            )
+            ranks = ranks.select("node", "pr")
+        elif dangling:
+            # dangling mode references `ranks` TWICE per iteration
+            # (contribution join + dangling-sum semi-join), so a lazy chain
+            # doubles the plan tree every round — 2^iters subtrees OOMed
+            # the planner at 60 lazy iterations; checkpointed rounds keep
+            # the plan constant-depth and the work linear
+            ranks, _, _ = _iterate(ranks, step, iters)
         else:
-            ranks = nxt
-    # materialize the final ranks (localCheckpoint truncates lineage and,
-    # unlike persist, is GC'd with the frame), then RELEASE the loop
-    # invariants: without the unpersist every call leaves two cached
-    # copies of the edge frame pinned for the session lifetime — a
-    # 200-query registry sweep would accrete them all
-    ranks = ranks.localCheckpoint()
-    eo.unpersist()
-    nodes.unpersist()
-    if dang is not None:
-        dang.unpersist()
-    if tele is not None:
-        tele.unpersist()
+            for _ in range(iters):
+                ranks = step(ranks)
+            # materialize the final ranks (localCheckpoint truncates
+            # lineage) before the loop caches are released
+            ranks = ranks.localCheckpoint()
     if stats is not None:
         stats["iterations"] = ran
         stats["delta"] = delta
@@ -521,8 +635,6 @@ def triangle_counts(edges: DataFrame, src: str = "src", dst: str = "dst") -> Dat
     # fragile under AQE replanning and at 100x each re-derivation is a
     # re-shuffle of the fact table the edges came from). Same loop-
     # invariant hygiene as pagerank's eo/nodes; released before return.
-    from pyspark import StorageLevel
-
     oriented = oriented.persist(StorageLevel.MEMORY_AND_DISK)
     e1 = oriented.alias("e1")
     e2 = oriented.alias("e2")
@@ -546,16 +658,7 @@ def triangle_counts(edges: DataFrame, src: str = "src", dst: str = "dst") -> Dat
     # exchanges were reused, so the join/probe stages ran 3x (guide
     # §2.4 "duplicated subtrees"). explode(array(x,y,z)) emits the
     # identical row multiset from ONE enumeration pass.
-    if _explode_members(tris.sparkSession):
-        members = tris.select(
-            F.explode(F.array("x", "y", "z")).alias("node")
-        )
-    else:
-        members = (
-            tris.select(F.col("x").alias("node"))
-            .union(tris.select(F.col("y").alias("node")))
-            .union(tris.select(F.col("z").alias("node")))
-        )
+    members = tris.select(F.explode(F.array("x", "y", "z")).alias("node"))
     counts = members.groupBy("node").agg(F.count(F.lit(1)).alias("n_triangles"))
     # materialize (localCheckpoint is eager and truncates lineage), then
     # RELEASE the persisted invariant — mirrors pagerank's unpersist
@@ -607,8 +710,6 @@ def hits(
     dangling ``pagerank`` path documents). Both partitioned edge caches
     are loop invariants, released before return.
     """
-    from pyspark import StorageLevel
-
     if iters < 1:
         # the final union reads the last authority frame, which only
         # exists after at least one half-step — without this guard a
@@ -643,16 +744,6 @@ def hits(
     spark = e.sparkSession
     cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
     k = max(1, min(cap, -(-e.count() // _LOOP_CACHE_ROWS_PER_PART)))
-    e_dst = e.repartition(k, "dst").persist(StorageLevel.MEMORY_AND_DISK)
-    # r21 memory-trade dial (VERDICT r20 next-round #6): true drops the
-    # second partitioned copy — the h-half-step then reads the dst-keyed
-    # cache and pays one groupBy(src) exchange per round, halving the
-    # loop's cache footprint. Measured A/B + per-cache storage bytes in
-    # BENCH_hitsmem.json; default keeps the exchange-free dual layout.
-    if spark.conf.get("spark.graft.graph.hitsSingleCache", "false") == "true":
-        e_src = e_dst
-    else:
-        e_src = e.repartition(k, "src").persist(StorageLevel.MEMORY_AND_DISK)
 
     def _renorm(raw: DataFrame, n_side: int) -> DataFrame:
         total = raw.agg(F.sum("s").alias("_t"))
@@ -660,56 +751,75 @@ def hits(
             "node", (F.col("s") * F.lit(float(n_side)) / F.col("_t")).alias("s")
         )
 
-    # initial hubs ride the src-partitioned cache: distinct on src is
-    # exchange-free there, same reuse as the half-steps
-    h = e_src.select(F.col("src").alias("node")).distinct().select(
-        "node", F.lit(1.0).alias("s")
-    ).localCheckpoint()
-    # side cardinalities come from frames the loop materializes anyway
-    # (a count_distinct-pair setup stage was the profiler's single
-    # heaviest item: 16.4 s task time for 3.6 MB of input). One row per
-    # distinct src by construction — a count over the |V|-row checkpoint
-    # just materialized, no extra corpus pass
-    n_hubs = h.count()
-    n_auths = a_raw = None
-    h_frame = h
-    for _ in range(iters):
-        # checkpoint the RAW half-step aggregate (one exchange-free
-        # stage) and keep the renorm LAZY over it: the renorm is a pure
-        # projection + one tiny total-aggregate on |V| checkpointed
-        # rows, so its two references (next join's broadcast build +
-        # final output) re-read the checkpoint instead of re-running
-        # the edge aggregate — same float ops in the same order, the
-        # materialization point just moved below the renorm
-        a_raw = (
-            e_dst.join(_bc(h_frame), e_dst["src"] == h_frame["node"])
-            .groupBy("dst")
-            .agg(F.sum("s").alias("s"))
-            .select(F.col("dst").alias("node"), "s")
-            .localCheckpoint()
+    with ExitStack() as scope:
+        e_dst, _ = scope.enter_context(_loop_cache(e.repartition(k, "dst")))
+        # r21 memory-trade dial (VERDICT r20 next-round #6): true drops the
+        # second partitioned copy — the h-half-step then reads the
+        # dst-keyed cache and pays one groupBy(src) exchange per round,
+        # halving the loop's cache footprint. Measured A/B + per-cache
+        # storage bytes in BENCH_hitsmem.json; default keeps the
+        # exchange-free dual layout.
+        e_src = e_dst
+        if spark.conf.get("spark.graft.graph.hitsSingleCache", "false") != "true":
+            e_src, _ = scope.enter_context(_loop_cache(e.repartition(k, "src")))
+        # side cardinalities come from the first checkpoint of each side
+        # (a count_distinct-pair setup stage was the profiler's single
+        # heaviest item: 16.4 s task time for 3.6 MB of input): one row
+        # per distinct src / dst by construction, since every dst has
+        # indegree >= 1 the first authority half-step covers its side
+        n_side: dict[str, int] = {}
+        a_raws: list[DataFrame] = []
+
+        def step(h_raw: DataFrame) -> DataFrame:
+            # a round's state is the RAW hub aggregate; the renorm stays
+            # LAZY over it: a pure projection + one tiny total-aggregate
+            # on |V| checkpointed rows, so its two references (next
+            # join's broadcast build + final output) re-read the
+            # checkpoint instead of re-running the edge aggregate. The
+            # opening all-ones hubs enter un-normalized.
+            if "hub" in n_side:
+                h_frame = _renorm(h_raw, n_side["hub"])
+            else:
+                n_side["hub"] = h_raw.count()
+                h_frame = h_raw
+            if a_raws:
+                _release(a_raws.pop())
+            a_raw = (
+                e_dst.join(_bc(h_frame), e_dst["src"] == h_frame["node"])
+                .groupBy("dst")
+                .agg(F.sum("s").alias("s"))
+                .select(F.col("dst").alias("node"), "s")
+                .localCheckpoint()
+            )
+            a_raws.append(a_raw)
+            if "auth" not in n_side:
+                n_side["auth"] = a_raw.count()
+            a_frame = _renorm(a_raw, n_side["auth"])
+            return (
+                e_src.join(_bc(a_frame), e_src["dst"] == a_frame["node"])
+                .groupBy("src")
+                .agg(F.sum("s").alias("s"))
+                .select(F.col("src").alias("node"), "s")
+            )
+
+        # initial hubs ride the src-partitioned cache: distinct on src is
+        # exchange-free there, same reuse as the half-steps
+        h_raw, _, _ = _iterate(
+            e_src.select(F.col("src").alias("node")).distinct().select(
+                "node", F.lit(1.0).alias("s")
+            ),
+            step,
+            iters,
         )
-        if n_auths is None:
-            # every dst has indegree >= 1, so the first authority
-            # half-step covers the full side: its checkpointed row
-            # count IS the side cardinality
-            n_auths = a_raw.count()
-        a_frame = _renorm(a_raw, n_auths)
-        h_raw = (
-            e_src.join(_bc(a_frame), e_src["dst"] == a_frame["node"])
-            .groupBy("src")
-            .agg(F.sum("s").alias("s"))
-            .select(F.col("src").alias("node"), "s")
-            .localCheckpoint()
-        )
-        h_frame = _renorm(h_raw, n_hubs)
-    out = h_frame.select("node", F.lit("hub").alias("kind"), "s").union(
-        _renorm(a_raw, n_auths).select(
-            "node", F.lit("authority").alias("kind"), "s"
-        )
-    ).localCheckpoint()
-    e_dst.unpersist()
-    if e_src is not e_dst:
-        e_src.unpersist()
+        out = _renorm(h_raw, n_side["hub"]).select(
+            "node", F.lit("hub").alias("kind"), "s"
+        ).union(
+            _renorm(a_raws[-1], n_side["auth"]).select(
+                "node", F.lit("authority").alias("kind"), "s"
+            )
+        ).localCheckpoint()
+    _release(h_raw)
+    _release(a_raws[-1])
     return out
 
 
@@ -744,22 +854,19 @@ def connected_components_star(
       minimum smaller neighbor (emit (v, m) for v in N⁻(u) ∪ {u}, v ≠ m).
 
     Both preserve connectivity; the fixpoint is a star per component
-    (every non-root pointing straight at the component min). Rounds are
-    localCheckpoint-ed (same loop hygiene as hop_distances) so the plan
-    never compounds. Termination (r14, VERDICT r13 #6) is detected
-    IN-ROUND by a structural star test instead of waiting for a no-op
-    round: the per-round fingerprint aggregate also computes
-    count_distinct(u), and when count == count_distinct (out-degree 1
-    everywhere) a chain probe (does any target v also appear as a
-    source u?) runs against the just-materialized edge frame. Out-degree
-    1 + chain-free means the edge set is a disjoint union of stars whose
-    roots are each component's min (all edges point strictly big→small),
-    which IS the algorithm's fixpoint — applying another alternation
-    provably returns the same set, so the old fingerprint-equality break
-    (kept as a backstop) would only burn one more full shuffle round to
-    learn nothing. The probe is a semi-join over the localCheckpoint-ed
-    frame, touched only in rounds that already look converged; measured
-    round counts on the BENCH_graph chain fixtures drop by exactly 1.
+    (every non-root pointing straight at the component min). Rounds run
+    on ``_iterate`` so the plan never compounds. Termination (r14,
+    VERDICT r13 #6) is detected IN-ROUND by a structural star test
+    instead of waiting for a no-op round, and the test is the round's
+    one fingerprint aggregate: per node it folds the out-degree and
+    whether the node is some edge's target. Out-degree <= 1 everywhere
+    and no node both a source and a target means the edge set is a
+    disjoint union of stars whose roots are each component's min (all
+    edges point strictly big→small), which IS the algorithm's fixpoint —
+    applying another alternation provably returns the same set, so the
+    (count, xor-hash) repeat test (kept as a backstop) would only burn
+    one more full shuffle round to learn nothing; measured round counts
+    on the BENCH_graph chain fixtures drop by exactly 1.
 
     Nodes are those incident to at least one edge; callers with isolated
     nodes attach them as (node, node) afterwards. Self-loops ignored.
@@ -780,8 +887,6 @@ def connected_components_star(
     (ADVICE r13), so the operator raises RuntimeError instead of
     returning them; ``stats`` is still populated for post-mortems.
     """
-    from pyspark import StorageLevel
-
     # orient big→small once; the loop maintains this invariant
     e = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
@@ -792,12 +897,8 @@ def connected_components_star(
     )
     if not distinct_pairs:
         e = e.distinct()
-    e = e.localCheckpoint()
-    prev = None
-    rounds = 0
-    converged = False
-    for _ in range(max_rounds):
-        rounds += 1
+
+    def step(e: DataFrame) -> DataFrame:
         # -- large-star over the symmetric neighborhood ------------------
         sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         mins = sym.groupBy("u").agg(
@@ -818,41 +919,46 @@ def connected_components_star(
             .filter(F.col("u") != F.col("v"))
         )
         centers = mins2.select(F.col("u"), F.col("m").alias("v"))
-        nxt = attach.union(centers).distinct().localCheckpoint()
-        chk = nxt.agg(
-            F.count(F.lit(1)).alias("n"),
-            # out-degree-1 half of the in-round star test, folded into
-            # the fingerprint aggregate (same single pass)
-            F.count_distinct("u").alias("nd"),
-            # xor-fold, not sum: order-insensitive AND overflow-free
-            # under ANSI arithmetic (a sum of 64-bit hashes overflows)
-            F.expr("bit_xor(xxhash64(u, v))").alias("h"),
-        ).collect()[0]
-        e = nxt
-        if chk["n"] == chk["nd"]:
-            # every source points at exactly one target; if additionally
-            # no target is itself a source, the set is disjoint min-root
-            # stars — the fixpoint — and we stop WITHOUT the proving round
-            chained = nxt.select("v").join(
-                nxt.select(F.col("u").alias("v")), "v", "left_semi"
+        return attach.union(centers).distinct()
+
+    def fingerprint(e: DataFrame):
+        # per node x: o = out-degree, t = 1 if x is some edge's target.
+        # The edge set is min-root stars exactly when no node has o > 1
+        # or is both a source and a target ("bad"); h xor-folds the edge
+        # hashes (order-insensitive, overflow-free under ANSI arithmetic)
+        per = (
+            e.select(
+                F.col("u").alias("x"),
+                F.lit(1).alias("o"),
+                F.lit(0).alias("t"),
+                F.xxhash64("u", "v").alias("h"),
             )
-            if chained.isEmpty():
-                converged = True
-                break
-        # backstop: edge-set stability fingerprint (covers any fixpoint
-        # the structural test might not classify)
-        if prev is not None and (chk["n"], chk["h"]) == prev:
-            converged = True
-            break
-        prev = (chk["n"], chk["h"])
-    if stats is not None:
-        stats["rounds"] = rounds
-        stats["converged"] = converged
-    if not converged:
-        raise RuntimeError(
-            f"connected_components_star did not converge within "
-            f"{max_rounds} rounds — labels would be incorrect"
+            .union(e.select("v", F.lit(0), F.lit(1), F.lit(0).cast("long")))
+            .groupBy("x")
+            .agg(F.sum("o").alias("o"), F.max("t").alias("t"), F.bit_xor("h").alias("h"))
         )
+        bad = (F.col("o") > 1) | ((F.col("o") == 1) & (F.col("t") == 1))
+        return per.agg(
+            F.sum("o").alias("n"), F.count_if(bad).alias("bad"), F.bit_xor("h").alias("h")
+        ).collect()[0]
+
+    def converged(row, prev) -> bool:
+        # the star test stops WITHOUT a proving round; the repeated
+        # (count, hash) fingerprint is the backstop for any fixpoint the
+        # structural test might not classify
+        return row["bad"] == 0 or (
+            prev is not None and (row["n"], row["h"]) == (prev["n"], prev["h"])
+        )
+
+    e, _, _ = _iterate(
+        e,
+        step,
+        max_rounds,
+        fingerprint=fingerprint,
+        converged=converged,
+        name="connected_components_star",
+        stats=stats,
+    )
     return (
         e.select(F.col("u").alias("node"), F.col("v").alias("component"))
         .union(e.select(F.col("v").alias("node"), F.col("v").alias("component")))
@@ -880,60 +986,49 @@ def hop_distances(
     loop invariant and is persisted; the visited set is rebuilt per
     round (at 100 TB checkpoint it every few hops to cut lineage).
     """
-    from pyspark import StorageLevel
-
-    e_cached = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    # ONE action fetches the default source AND the edge count (which
-    # sizes the cache compaction below); it also materializes the cache,
-    # so the caller never builds the edges twice
-    row = e_cached.agg(
-        F.min("src").alias("m"), F.count(F.lit(1)).alias("n")
-    ).collect()[0]
-    if source is None:
-        # default source = minimum src value, read from the (now cached)
-        # edge frame
-        source = row["m"]
+    proj = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    # seed schema derives from the edge column's actual type — node ids
+    # may be long, int or string depending on the graph
+    seed_t = edges.schema[src].dataType.simpleString()
     # NOT keyed (r20 session 5): the keyed-cache layout (see _keyed) was
     # probed here and measured neutral-to-slower (5-sample alternating
     # medians 0.956 vs 0.901 s staged / tie unstaged) — each wave's
     # build side is AQE's per-wave pick (frontier early, edge set late),
     # so the dst-partitioned cache never feeds an exchange-free distinct
     # at fixture scale, and hinting the frontier broadcast to force it
-    # was +7-8% (a BFS frontier grows toward |V|). The Change-6 coalesce
-    # layout stays.
-    e = _narrowed(e_cached, row["n"])
-    # seed schema derives from the edge column's actual type — node ids
-    # may be long, int or string depending on the graph
-    seed_t = edges.schema[src].dataType.simpleString()
-    visited = _seed1(e.sparkSession, source, seed_t, "hops", 0, "int")
-    frontier = visited
-    for k in range(1, max_hops + 1):
-        nxt = (
-            frontier.join(e, frontier["node"] == e["src"])
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .select("node", F.lit(k).alias("hops"))
+    # was +7-8% (a BFS frontier grows toward |V|). The cache-sizing count
+    # also fetches the default source (the minimum src value).
+    with _loop_cache(proj, "narrow", aggs=[F.min("src").alias("m")]) as (e, row):
+        if source is None:
+            source = row["m"]
+        waves: list[DataFrame] = []  # the seed and every wave so far
+
+        def step(frontier: DataFrame) -> DataFrame:
+            waves.append(frontier)
+            visited = reduce(DataFrame.union, waves)
+            return (
+                frontier.join(e, frontier["node"] == e["src"])
+                .select(F.col("dst").alias("node"))
+                .distinct()
+                .join(visited.select("node"), "node", "left_anti")
+                .select("node", F.lit(len(waves)).alias("hops"))
+            )
+
+        # the output reads every wave, so the rounds are kept; an empty
+        # wave ends the BFS
+        last, _, done = _iterate(
+            _seed1(e.sparkSession, source, seed_t, "hops", 0, "int"),
+            step,
+            max_hops,
+            fingerprint=_rows,
+            converged=lambda n, prev: n == 0,
+            keep=True,
         )
-        # materialize the wave and TRUNCATE its lineage: each round's
-        # emptiness check is an action, and without the checkpoint round
-        # k's plan re-executes rounds 1..k-1 (the union/anti-join chain
-        # compounds and OOMed a default-heap run at a few thousand
-        # edges). localCheckpoint is the local-mode form; a cluster run
-        # with lossy executors would use reliable checkpoint() instead.
-        nxt = nxt.localCheckpoint()
-        # driver-side emptiness check ends the loop early: one tiny
-        # action per round, the standard BFS termination
-        if nxt.isEmpty():
-            break
-        visited = visited.union(nxt)
-        frontier = nxt
-    # every wave is localCheckpoint-ed, so the result no longer depends
-    # on the cached edge frame — release it (see pagerank note)
-    e_cached.unpersist()
-    return visited
+    if done:
+        _release(last)  # the empty wave
+    else:
+        waves.append(last)
+    return reduce(DataFrame.union, waves)
 
 
 def weighted_sssp(
@@ -972,49 +1067,30 @@ def weighted_sssp(
     Ford needs ≤ (longest shortest path in EDGES) rounds — diameter-ish,
     not |V| — and the scheduled bound is picked from measured
     convergence with margin, shared with the oracle."""
-    from pyspark import StorageLevel
-
-    e_cached = edges.select(
+    proj = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst"), F.col(cost).alias("cost")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    # one action fetches the default source and the edge count sizing the
-    # cache compaction (_narrowed), and materializes the cache
-    row = e_cached.agg(
-        F.min("src").alias("m"), F.count(F.lit(1)).alias("n")
-    ).collect()[0]
-    if source is None:
-        source = row["m"]
-    e = _narrowed(e_cached, row["n"])
+    )
     seed_t = edges.schema[src].dataType.simpleString()
-    d = _seed1(e.sparkSession, source, seed_t, "dist", 0, "long").localCheckpoint()
-    prev = d.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("dist").alias("s")
-    ).collect()[0]
-    prev = (prev["n"], prev["s"])
-    converged = False
-    for _ in range(rounds):
-        relax = d.join(e, d["node"] == e["src"]).select(
-            F.col("dst").alias("node"), (F.col("dist") + F.col("cost")).alias("dist")
-        )
-        d = (
-            d.unionByName(relax)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint()
-        )
-        chk = d.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("dist").alias("s")
-        ).collect()[0]
-        if (chk["n"], chk["s"]) == prev:
-            converged = True
-            break
-        prev = (chk["n"], chk["s"])
-    e_cached.unpersist()
-    if not converged:
-        raise RuntimeError(
-            f"weighted_sssp did not reach its fixpoint within rounds={rounds};"
-            f" truncated distances would be silently too long — raise the"
-            f" schedule bound (it is shared with the oracle)"
+    # the cache-sizing count also fetches the default source
+    with _loop_cache(proj, "narrow", aggs=[F.min("src").alias("m")]) as (e, row):
+        if source is None:
+            source = row["m"]
+
+        def step(d: DataFrame) -> DataFrame:
+            relax = d.join(e, d["node"] == e["src"]).select(
+                F.col("dst").alias("node"),
+                (F.col("dist") + F.col("cost")).alias("dist"),
+            )
+            return d.unionByName(relax).groupBy("node").agg(F.min("dist").alias("dist"))
+
+        d, _, _ = _iterate(
+            _seed1(e.sparkSession, source, seed_t, "dist", 0, "long"),
+            step,
+            rounds,
+            fingerprint=lambda d: d.agg(
+                F.count(F.lit(1)).alias("n"), F.sum("dist").alias("s")
+            ).collect()[0],
+            name="weighted_sssp",
         )
     return d
 
@@ -1049,50 +1125,45 @@ def label_propagation(
     depth stays constant; the edge frame is a persisted loop invariant,
     released before return.
     """
-    from pyspark import StorageLevel
     from pyspark.sql import Window
 
     if iters < 1:
         raise ValueError(f"label_propagation: iters must be >= 1, got {iters}")
-    e_cached = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    # materialize the cache and size its compaction in one tiny action;
+    w = Window.partitionBy("node").orderBy(F.desc("c"), F.asc("label"))
     # keyed on dst (r20 session 5): the per-round (dst, label) count AND
     # the per-node top-1 window are both clustered on the dst-derived
     # node, so the keyed cache makes each round's TWO exchanges vanish
     # (HashPartitioning(dst) satisfies ClusteredDistribution(dst, label)
     # and ClusteredDistribution(node) alike)
-    e = _keyed(e_cached, e_cached.count(), "dst")
-    labels = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .select("node", F.col("node").alias("label"))
-        .localCheckpoint()
-    )
-    w = Window.partitionBy("node").orderBy(F.desc("c"), F.asc("label"))
-    for _ in range(iters):
-        # keyed layout: hint the |V|-row label side broadcast so the
-        # KEYED edge cache is the streamed side — the join output then
-        # carries HashPartitioning(dst) and both the (node, label)
-        # count and the top-1 window run exchange-free (without the
-        # hint AQE broadcasts whichever side is smaller; at fixture
-        # scale that is often the edge cache itself, which throws the
-        # keyed partitioning away)
-        counts = (
-            e.join(_bc(labels), e["src"] == labels["node"])
-            .groupBy(F.col("dst").alias("node"), "label")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
+    proj = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    with _loop_cache(proj, "keyed", "dst") as (e, _):
         labels = (
-            counts.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select("node", "label")
-            .localCheckpoint()
+            e.select(F.col("src").alias("node"))
+            .union(e.select(F.col("dst").alias("node")))
+            .distinct()
+            .select("node", F.col("node").alias("label"))
         )
-    e_cached.unpersist()
-    e.unpersist()
+
+        def step(labels: DataFrame) -> DataFrame:
+            # keyed layout: hint the |V|-row label side broadcast so the
+            # KEYED edge cache is the streamed side — the join output then
+            # carries HashPartitioning(dst) and both the (node, label)
+            # count and the top-1 window run exchange-free (without the
+            # hint AQE broadcasts whichever side is smaller; at fixture
+            # scale that is often the edge cache itself, which throws the
+            # keyed partitioning away)
+            counts = (
+                e.join(_bc(labels), e["src"] == labels["node"])
+                .groupBy(F.col("dst").alias("node"), "label")
+                .agg(F.count(F.lit(1)).alias("c"))
+            )
+            return (
+                counts.withColumn("_rn", F.row_number().over(w))
+                .filter(F.col("_rn") == 1)
+                .select("node", "label")
+            )
+
+        labels, _, _ = _iterate(labels, step, iters)
     return labels.select("node", F.col("label").alias("community"))
 
 
@@ -1134,41 +1205,35 @@ def coreness(
     a convergence check per round, the fixture pins the fixed-round
     form so the oracle can unroll it.
     """
-    from pyspark import StorageLevel
     from pyspark.sql import Window
 
     if iters < 1:
         raise ValueError(f"coreness: iters must be >= 1, got {iters}")
-    e_cached = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    # materialize the cache and size its compaction in one tiny action;
+    w = Window.partitionBy("node").orderBy(F.desc("c"))
     # keyed on dst (r20 session 5): each round's neighbor-value window
     # and h-index max both cluster on the dst-derived node, so the keyed
     # cache removes the per-round window exchange
-    e = _keyed(e_cached, e_cached.count(), "dst")
-    vals = (
-        e.groupBy(F.col("src").alias("node"))
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .localCheckpoint()
-    )
-    w = Window.partitionBy("node").orderBy(F.desc("c"))
-    for _ in range(iters):
-        # keyed layout: hint the |V|-row value side broadcast so the
-        # keyed edge cache is the streamed side and the window + h-index
-        # max run exchange-free on HashPartitioning(dst) (see the LPA
-        # note)
-        nb = e.join(_bc(vals), e["src"] == vals["node"]).select(
-            F.col("dst").alias("node"), "c"
+    proj = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    with _loop_cache(proj, "keyed", "dst") as (e, _):
+        vals = e.groupBy(F.col("src").alias("node")).agg(
+            F.count(F.lit(1)).cast("long").alias("c")
         )
-        vals = (
-            nb.withColumn("_rn", F.row_number().over(w).cast("long"))
-            .groupBy("node")
-            .agg(F.max(F.least("_rn", "c")).alias("c"))
-            .localCheckpoint()
-        )
-    e_cached.unpersist()
-    e.unpersist()
+
+        def step(vals: DataFrame) -> DataFrame:
+            # keyed layout: hint the |V|-row value side broadcast so the
+            # keyed edge cache is the streamed side and the window +
+            # h-index max run exchange-free on HashPartitioning(dst) (see
+            # the LPA note)
+            nb = e.join(_bc(vals), e["src"] == vals["node"]).select(
+                F.col("dst").alias("node"), "c"
+            )
+            return (
+                nb.withColumn("_rn", F.row_number().over(w).cast("long"))
+                .groupBy("node")
+                .agg(F.max(F.least("_rn", "c")).alias("c"))
+            )
+
+        vals, _, _ = _iterate(vals, step, iters)
     return vals.select("node", F.col("c").alias("core"))
 
 
@@ -1208,45 +1273,43 @@ def deterministic_walks(
     ever strands; a stranded dangling node would simply end its walk
     early on a directed graph).
     """
-    from pyspark import StorageLevel
     from pyspark.sql import Window
 
     from dataengineerchallenge_spark.functions.hashing import spark_u32
 
     if steps < 1:
         raise ValueError(f"deterministic_walks: steps must be >= 1, got {steps}")
-    e_cached = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).persist(
-        StorageLevel.MEMORY_AND_DISK
+    proj = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    with _loop_cache(proj, "narrow") as (e, _):
+        frames: list[DataFrame] = []  # the output reads every step
+
+        def step(cur: DataFrame) -> DataFrame:
+            frames.append(cur)
+            key = (
+                f"concat(cast(walk_id as string), ':{len(frames)}:', "
+                f"cast(dst as string))"
+            )
+            cand = cur.join(e, cur["node"] == e["src"]).select(
+                "walk_id", "dst", F.expr(spark_u32(key)).alias("hv")
+            )
+            w = Window.partitionBy("walk_id").orderBy("hv", "dst")
+            return (
+                cand.withColumn("_rn", F.row_number().over(w))
+                .filter(F.col("_rn") == 1)
+                .select("walk_id", F.col("dst").alias("node"))
+            )
+
+        start = (
+            e.select(F.col("src").alias("node"))
+            .distinct()
+            .select(F.col("node").alias("walk_id"), "node")
+        )
+        last, _, _ = _iterate(start, step, steps, keep=True)
+    frames.append(last)
+    return reduce(
+        DataFrame.union,
+        (f.select("walk_id", F.lit(i).alias("step"), "node") for i, f in enumerate(frames)),
     )
-    # materialize the cache and size its compaction in one tiny action
-    e = _narrowed(e_cached, e_cached.count())
-    cur = (
-        e.select(F.col("src").alias("node"))
-        .distinct()
-        .select(F.col("node").alias("walk_id"), "node")
-        .localCheckpoint()
-    )
-    frames = [cur.select("walk_id", F.lit(0).alias("step"), "node")]
-    for i in range(1, steps + 1):
-        key = (
-            f"concat(cast(walk_id as string), ':{i}:', cast(dst as string))"
-        )
-        cand = cur.join(e, cur["node"] == e["src"]).select(
-            "walk_id", "dst", F.expr(spark_u32(key)).alias("hv")
-        )
-        w = Window.partitionBy("walk_id").orderBy("hv", "dst")
-        cur = (
-            cand.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select("walk_id", F.col("dst").alias("node"))
-            .localCheckpoint()
-        )
-        frames.append(cur.select("walk_id", F.lit(i).alias("step"), "node"))
-    e_cached.unpersist()
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.union(f)
-    return out
 
 
 def truss(
@@ -1276,19 +1339,21 @@ def truss(
     is orientation-invariant, so the DuckDB oracle uses the simpler
     raw-id orientation and still matches value-for-value): one
     self-join of the oriented edges on the wedge corner, one closing-
-    edge equi-join against the canonical edge list, one 3-way union +
-    partial-agg count. Rounds are localCheckpoint-ed; per-round
-    intermediates are persisted within the round and released.
+    edge equi-join against the canonical edge list, one explode +
+    partial-agg count. Rounds run on ``_iterate``; a round's oriented
+    edges are persisted within the round and released.
 
     ``edges`` may carry one or both directions; pairs are
     canonicalized and deduplicated first.
     """
-    from pyspark import StorageLevel
-
     if k < 3:
         raise ValueError(f"truss: k must be >= 3, got {k}")
     if iters < 1:
         raise ValueError(f"truss: iters must be >= 1, got {iters}")
+    # a round's state is the current edge set annotated with its support;
+    # the next round keeps the edges with support >= k-2 and re-counts.
+    # The opening edge set enters with support k-2 (every edge kept), so
+    # iters pruning rounds plus the final re-count are iters+1 rounds.
     e = (
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("a"),
@@ -1296,10 +1361,19 @@ def truss(
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint()
+        .withColumn("support", F.lit(k - 2).cast("long"))
     )
+    # a round's oriented edges are persisted (consumed by both wedge legs)
+    # and released once the round that read them is checkpointed
+    held: list[DataFrame] = []
 
-    def support(ecur: DataFrame) -> DataFrame:
+    def unhold() -> None:
+        while held:
+            held.pop().unpersist()
+
+    def step(state: DataFrame) -> DataFrame:
+        unhold()
+        ecur = state.filter(F.col("support") >= k - 2).select("a", "b")
         und = ecur.union(ecur.select(F.col("b").alias("a"), F.col("a").alias("b")))
         deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
         ranked = (
@@ -1322,6 +1396,7 @@ def truss(
             .select(F.col("a").alias("u"), F.col("b").alias("v"))
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
+        held.append(oriented)
         w = (
             oriented.alias("x")
             .join(
@@ -1334,56 +1409,29 @@ def truss(
             ecur.alias("z"),
             (F.least("p", "q") == F.col("z.a")) & (F.greatest("p", "q") == F.col("z.b")),
         ).select("t", "p", "q")
-        # r20 session 4: same duplicated-subtree fix as triangle_counts
-        # (guide §2.4) — a triangle reinforces its three sides; the
-        # 3-way UNION re-ran the per-round wedge + closing joins once
-        # per branch, explode(array(struct,struct,struct)) emits the
-        # identical (a, b) row multiset from one pass.
-        if _explode_members(tri.sparkSession):
-            sides = tri.select(
-                F.explode(
-                    F.array(
-                        F.struct(
-                            F.least("t", "p").alias("a"),
-                            F.greatest("t", "p").alias("b"),
-                        ),
-                        F.struct(
-                            F.least("t", "q").alias("a"),
-                            F.greatest("t", "q").alias("b"),
-                        ),
-                        F.struct(
-                            F.least("p", "q").alias("a"),
-                            F.greatest("p", "q").alias("b"),
-                        ),
+        # a triangle reinforces its three sides: explode(array(...)) emits
+        # the (a, b) row multiset from one pass over the enumeration (a
+        # 3-way UNION re-ran the wedge + closing joins once per branch)
+        sides = tri.select(
+            F.explode(
+                F.array(
+                    *(
+                        F.struct(F.least(x, y).alias("a"), F.greatest(x, y).alias("b"))
+                        for x, y in (("t", "p"), ("t", "q"), ("p", "q"))
                     )
-                ).alias("_side")
-            ).select(F.col("_side.a").alias("a"), F.col("_side.b").alias("b"))
-        else:
-            sides = (
-                tri.select(F.least("t", "p").alias("a"), F.greatest("t", "p").alias("b"))
-                .union(tri.select(F.least("t", "q").alias("a"), F.greatest("t", "q").alias("b")))
-                .union(tri.select(F.least("p", "q").alias("a"), F.greatest("p", "q").alias("b")))
-            )
+                )
+            ).alias("_side")
+        ).select(F.col("_side.a").alias("a"), F.col("_side.b").alias("b"))
         supp = sides.groupBy("a", "b").agg(F.count(F.lit(1)).alias("s"))
-        out = (
-            ecur.join(supp, ["a", "b"], "left")
-            .select("a", "b", F.coalesce("s", F.lit(0)).cast("long").alias("support"))
-            .localCheckpoint()
+        return ecur.join(supp, ["a", "b"], "left").select(
+            "a", "b", F.coalesce("s", F.lit(0)).cast("long").alias("support")
         )
-        oriented.unpersist()
-        return out
 
-    for i in range(iters):
-        e = (
-            support(e)
-            .filter(F.col("support") >= k - 2)
-            .select("a", "b")
-            .localCheckpoint()
-        )
-    final = support(e)
-    return final.select(
-        F.col("a").alias("src"), F.col("b").alias("dst"), "support"
-    )
+    try:
+        final, _, _ = _iterate(e, step, iters + 1)
+    finally:
+        unhold()
+    return final.select(F.col("a").alias("src"), F.col("b").alias("dst"), "support")
 
 
 def _minlabel_fixpoint(nodes: DataFrame, e: DataFrame, hops: int) -> DataFrame:
@@ -1396,30 +1444,17 @@ def _minlabel_fixpoint(nodes: DataFrame, e: DataFrame, hops: int) -> DataFrame:
     updates. Convergence is checked by the label SUM (labels only ever
     decrease, so an unchanged sum is an unchanged labeling) — one tiny
     scalar action per round instead of a change-detection join."""
-    m = nodes.select("node", F.col("node").alias("m")).localCheckpoint()
-    prev_sum = m.agg(F.sum("m")).collect()[0][0]
-    converged = False
-    for _ in range(hops):
-        prop = e.join(m, e["src"] == m["node"]).select(
-            F.col("dst").alias("node"), "m"
-        )
-        m = (
-            m.unionByName(prop)
-            .groupBy("node")
-            .agg(F.min("m").alias("m"))
-            .localCheckpoint()
-        )
-        s = m.agg(F.sum("m")).collect()[0][0]
-        if s == prev_sum:
-            converged = True
-            break
-        prev_sum = s
-    if not converged and hops > 0:
-        raise RuntimeError(
-            f"min-label propagation did not reach its fixpoint within "
-            f"hops={hops}; a truncated labeling would split SCCs — raise "
-            f"the hop budget (schedule bounds are shared with the oracle)"
-        )
+    def step(m: DataFrame) -> DataFrame:
+        prop = e.join(m, e["src"] == m["node"]).select(F.col("dst").alias("node"), "m")
+        return m.unionByName(prop).groupBy("node").agg(F.min("m").alias("m"))
+
+    m, _, _ = _iterate(
+        nodes.select("node", F.col("node").alias("m")),
+        step,
+        hops,
+        fingerprint=lambda m: m.agg(F.sum("m")).collect()[0][0],
+        name="min-label propagation",
+    )
     return m
 
 
@@ -1457,55 +1492,60 @@ def scc_fb_minlabel(
     are localCheckpoint-ed (the lazy-plan-doubling trap), the edge
     frame is the loop invariant, and hop counts at 100 TB would ride
     the same bucketed edge layout as pagerank."""
-    from pyspark import StorageLevel
-
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    alive_n = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    alive_e = e
-    assigned: DataFrame | None = None
-    for _ in range(peels):
-        if alive_n.isEmpty():
-            break
-        fwd = _minlabel_fixpoint(alive_n, alive_e, hops)
-        rev = alive_e.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst")
-        )
-        bwd = _minlabel_fixpoint(alive_n, rev, hops)
-        done = (
-            fwd.join(bwd.withColumnRenamed("m", "bm"), "node")
-            .filter(F.col("m") == F.col("bm"))
-            .select("node", F.col("m").alias("scc_id"))
+    proj = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    with _loop_cache(proj) as (e, _):
+        alive_n = (
+            e.select(F.col("src").alias("node"))
+            .union(e.select(F.col("dst").alias("node")))
+            .distinct()
             .localCheckpoint()
         )
-        assigned = (
-            done if assigned is None else assigned.union(done).localCheckpoint()
-        )
-        alive_n = alive_n.join(
-            done.select("node"), "node", "left_anti"
-        ).localCheckpoint()
-        alive_e = (
-            alive_e.join(
-                alive_n.select(F.col("node").alias("src")), "src", "left_semi"
+        alive_e = e
+        assigned: DataFrame | None = None
+        for _ in range(peels):
+            if alive_n.isEmpty():
+                break
+            fwd = _minlabel_fixpoint(alive_n, alive_e, hops)
+            rev = alive_e.select(
+                F.col("dst").alias("src"), F.col("src").alias("dst")
             )
-            .join(alive_n.select(F.col("node").alias("dst")), "dst", "left_semi")
-            .localCheckpoint()
-        )
-    if not alive_n.isEmpty():
-        e.unpersist()
-        raise RuntimeError(
-            f"scc_fb_minlabel exhausted its peel budget (peels={peels}) "
-            f"with unassigned nodes remaining; a partial labeling would "
-            f"silently drop nodes — raise the schedule bounds (they are "
-            f"shared with the SQL oracle)"
-        )
-    e.unpersist()
+            bwd = _minlabel_fixpoint(alive_n, rev, hops)
+            done = (
+                fwd.join(bwd.withColumnRenamed("m", "bm"), "node")
+                .filter(F.col("m") == F.col("bm"))
+                .select("node", F.col("m").alias("scc_id"))
+                .localCheckpoint()
+            )
+            nxt_n = alive_n.join(
+                done.select("node"), "node", "left_anti"
+            ).localCheckpoint()
+            nxt_e = (
+                alive_e.join(
+                    nxt_n.select(F.col("node").alias("src")), "src", "left_semi"
+                )
+                .join(nxt_n.select(F.col("node").alias("dst")), "dst", "left_semi")
+                .localCheckpoint()
+            )
+            stale = [fwd, bwd, alive_n, alive_e]
+            if assigned is None:
+                assigned = done
+            else:
+                stale += [assigned, done]
+                assigned = assigned.union(done).localCheckpoint()
+            # this peel's inputs and scratch are released once the next
+            # peel's frames are materialized
+            for f in stale:
+                _release(f)
+            alive_n, alive_e = nxt_n, nxt_e
+        if not alive_n.isEmpty():
+            raise RuntimeError(
+                f"scc_fb_minlabel exhausted its peel budget (peels={peels}) "
+                f"with unassigned nodes remaining; a partial labeling would "
+                f"silently drop nodes — raise the schedule bounds (they are "
+                f"shared with the SQL oracle)"
+            )
+        _release(alive_n)
+        _release(alive_e)
     if assigned is None:
         spark = edges.sparkSession
         return spark.createDataFrame([], "node long, scc_id long")

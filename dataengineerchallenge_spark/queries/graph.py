@@ -14,7 +14,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dataengineerchallenge_spark.operators.graph import _bc, pagerank
+from dataengineerchallenge_spark.operators.graph import (
+    _bc,
+    _iterate,
+    _loop_cache,
+    _release,
+    pagerank,
+)
 from dataengineerchallenge_spark.registry import register
 from dataengineerchallenge_spark.sources.tables import load_table, local_frame
 
@@ -2396,45 +2402,8 @@ def spectral_smoothing(
     Returns the round-``rounds`` iterate (node, v) on the ±G grid. Every
     operation is integer, so the whole trajectory is engine-exact; the
     one guard is the int64 bound 2·n·c·G² (raise-don't-truncate)."""
-    from pyspark import StorageLevel
 
-    from dataengineerchallenge_spark.functions.hashing import spark_u32
-    from dataengineerchallenge_spark.operators.graph import _stats_keyed
-
-    # r21 change 2 (guide §2.4; the pagerank Change-12 layout applied to
-    # the repo's two heaviest registered plans): the per-round matvec is
-    # groupBy(src) over the loop-invariant edge cache, so laying the
-    # cache out HashPartitioning(src, k) once makes all `rounds`
-    # neighbor-sum aggregations exchange-free in place on the cache —
-    # the legacy layout paid one edge-scale partial-agg → Exchange →
-    # final-agg stage pair PER ROUND. deg then derives from the keyed
-    # cache (same groupBy key: also exchange-free, and its collect
-    # doubles as the cache-materializing action).
-    ep = _stats_keyed(e, "src").persist(StorageLevel.MEMORY_AND_DISK)
-    deg = ep.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    stats = deg.agg(
-        F.count(F.lit(1)).alias("n"), F.max("d").alias("dmax")
-    ).collect()[0]
-    n, c = stats["n"], 2 * stats["dmax"]
-    if 2 * n * c * _SB_G * _SB_G > 9_000_000_000_000_000_000:
-        raise RuntimeError(
-            f"spectral smoothing: int64 bound exceeded (n={n}, c={c}, "
-            f"G={_SB_G}) — coarsen the grid before the registers wrap"
-        )
-    x = deg.select(
-        F.col("src").alias("node"),
-        (
-            F.expr(
-                spark_u32(f"concat(cast(src as string), '{_SB_SALT}')")
-            )
-            % (2 * _SB_G + 1)
-            - _SB_G
-        )
-        .cast("long")
-        .alias("v"),
-    ).localCheckpoint()
-    degc = deg.localCheckpoint()
-    for r in range(rounds):
+    def one_round(x: DataFrame, ep: DataFrame, degc: DataFrame, n: int, c: int):
         nb = (
             ep.join(_bc(x), x["node"] == ep["dst"])
             .groupBy(ep["src"].alias("node"))
@@ -2458,7 +2427,7 @@ def spectral_smoothing(
                 f"greatest({n} * my - sy, -({n} * ny - sy))"
             ).alias("mz"),
         )
-        x = (
+        return (
             y.crossJoin(F.broadcast(a))
             .select(
                 "node",
@@ -2470,12 +2439,62 @@ def spectral_smoothing(
                 F.expr(_sb_x_case("div")).cast("long").alias("v"),
             )
         )
-        # execution barrier every ckpt_every rounds (and at the end) —
-        # the renorm above still runs every round, so the integer
-        # trajectory (and the hash) is unchanged vs per-round barriers
-        if (r + 1) % ckpt_every == 0 or r == rounds - 1:
-            x = x.localCheckpoint()
-    ep.unpersist()
+
+    return _sb_power(e, _SB_SALT, "spectral smoothing", rounds, ckpt_every, one_round)
+
+
+def _sb_power(
+    e: DataFrame, salt: str, name: str, rounds: int, ckpt_every: int, one_round
+) -> DataFrame:
+    """The scaffold both deflated power iterations share: the keyed edge
+    cache, the degree frame, the int64 guard, the hashed ±G start vector
+    and ``rounds`` rounds of ``one_round(x, ep, degc, n, c)`` with an
+    execution barrier every ``ckpt_every`` rounds — the renorm still
+    runs every round, so the integer trajectory (and the hash) is the
+    same at any cadence."""
+    from dataengineerchallenge_spark.functions.hashing import spark_u32
+
+    if rounds % ckpt_every:
+        raise ValueError(f"ckpt_every={ckpt_every} must divide rounds={rounds}")
+    # r21 change 2 (guide §2.4; the pagerank Change-12 layout applied to
+    # the repo's two heaviest registered plans): the per-round matvec is
+    # groupBy(src) over the loop-invariant edge cache, so laying the
+    # cache out HashPartitioning(src, k) once makes all `rounds`
+    # neighbor-sum aggregations exchange-free in place on the cache —
+    # the legacy layout paid one edge-scale partial-agg → Exchange →
+    # final-agg stage pair PER ROUND. deg then derives from the keyed
+    # cache (same groupBy key: also exchange-free, and its collect
+    # doubles as the cache-materializing action).
+    with _loop_cache(e, "stats", "src") as (ep, _):
+        deg = ep.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
+        stats = deg.agg(
+            F.count(F.lit(1)).alias("n"), F.max("d").alias("dmax")
+        ).collect()[0]
+        n, c = stats["n"], 2 * stats["dmax"]
+        if 2 * n * c * _SB_G * _SB_G > 9_000_000_000_000_000_000:
+            raise RuntimeError(
+                f"{name}: int64 bound exceeded (n={n}, c={c}, G={_SB_G}) — "
+                f"coarsen the grid before the registers wrap"
+            )
+        x = deg.select(
+            F.col("src").alias("node"),
+            (
+                F.expr(spark_u32(f"concat(cast(src as string), '{salt}')"))
+                % (2 * _SB_G + 1)
+                - _SB_G
+            )
+            .cast("long")
+            .alias("v"),
+        )
+        degc = deg.localCheckpoint()
+
+        def step(x: DataFrame) -> DataFrame:
+            for _ in range(ckpt_every):
+                x = one_round(x, ep, degc, n, c)
+            return x
+
+        x, _, _ = _iterate(x, step, rounds // ckpt_every)
+        _release(degc)
     return x
 
 
@@ -2662,42 +2681,10 @@ def spectral_second_direction(
     before direction 1's 4^m sweep even showed fusion losing at m=2;
     BENCH_spectral.json carries that direction-1 curve, the measured
     negative that set both defaults to per-round)."""
-    from pyspark import StorageLevel
-
-    from dataengineerchallenge_spark.functions.hashing import spark_u32
-    from dataengineerchallenge_spark.operators.graph import _stats_keyed
-
-    # r21 change 2: same keyed-cache layout as direction 1 (see
-    # spectral_smoothing) — the per-round matvec groupBy(src) runs
-    # exchange-free on the HashPartitioning(src, k) cache.
-    ep = _stats_keyed(e, "src").persist(StorageLevel.MEMORY_AND_DISK)
-    deg = ep.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    stats = deg.agg(
-        F.count(F.lit(1)).alias("n"), F.max("d").alias("dmax")
-    ).collect()[0]
-    n, c = stats["n"], 2 * stats["dmax"]
-    if 2 * n * c * _SB_G * _SB_G > 9_000_000_000_000_000_000:
-        raise RuntimeError(
-            f"spectral second direction: int64 bound exceeded (n={n}, "
-            f"c={c}, G={_SB_G}) — coarsen the grid before the registers "
-            "wrap"
-        )
     x1c = x1.select("node", F.col("v").alias("v1")).localCheckpoint()
     s = x1c.agg(F.sum(F.expr("v1 * v1")).alias("s")).collect()[0]["s"]
-    x = deg.select(
-        F.col("src").alias("node"),
-        (
-            F.expr(
-                spark_u32(f"concat(cast(src as string), '{_SB2_SALT}')")
-            )
-            % (2 * _SB_G + 1)
-            - _SB_G
-        )
-        .cast("long")
-        .alias("v"),
-    ).localCheckpoint()
-    degc = deg.localCheckpoint()
-    for r in range(rounds):
+
+    def one_round(x: DataFrame, ep: DataFrame, degc: DataFrame, n: int, c: int):
         nb = (
             ep.join(_bc(x), x["node"] == ep["dst"])
             .groupBy(ep["src"].alias("node"))
@@ -2728,7 +2715,7 @@ def spectral_second_direction(
                 f"greatest({n} * mt - st, -({n} * nt - st))"
             ).alias("mz"),
         )
-        x = (
+        return (
             t.crossJoin(F.broadcast(a))
             .select(
                 "node",
@@ -2740,9 +2727,10 @@ def spectral_second_direction(
                 F.expr(_sb_x_case("div")).cast("long").alias("v"),
             )
         )
-        if (r + 1) % ckpt_every == 0 or r == rounds - 1:
-            x = x.localCheckpoint()
-    ep.unpersist()
+
+    # same keyed-cache layout and scaffold as direction 1
+    x = _sb_power(e, _SB2_SALT, "spectral second direction", rounds, ckpt_every, one_round)
+    _release(x1c)
     return x
 
 
@@ -2906,32 +2894,29 @@ def copurchase_spectral_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"), F.max("d").alias("dmax")
     ).collect()[0]
     c = 2 * stats["dmax"]
-    from pyspark import StorageLevel
 
-    ep = e.persist(StorageLevel.MEMORY_AND_DISK)
-    degc = deg.localCheckpoint()
-    x1 = spectral_smoothing(spark, e)
-    x2 = spectral_second_direction(spark, e, x1)
-    lam = _sb_lambda_text(str(c))
-    out = (
-        _sb_rayleigh(x1, ep, degc, c)
-        .select(
-            F.lit(1).cast("long").alias("direction"),
-            "xx",
-            "xmx",
-            F.expr(lam).alias("lambda_l_micropoints"),
-        )
-        .unionByName(
-            _sb_rayleigh(x2, ep, degc, c).select(
-                F.lit(2).cast("long").alias("direction"),
+    with _loop_cache(e) as (ep, _):
+        degc = deg.localCheckpoint()
+        x1 = spectral_smoothing(spark, e)
+        x2 = spectral_second_direction(spark, e, x1)
+        lam = _sb_lambda_text(str(c))
+        return (
+            _sb_rayleigh(x1, ep, degc, c)
+            .select(
+                F.lit(1).cast("long").alias("direction"),
                 "xx",
                 "xmx",
                 F.expr(lam).alias("lambda_l_micropoints"),
             )
+            .unionByName(
+                _sb_rayleigh(x2, ep, degc, c).select(
+                    F.lit(2).cast("long").alias("direction"),
+                    "xx",
+                    "xmx",
+                    F.expr(lam).alias("lambda_l_micropoints"),
+                )
+            )
         )
-    )
-    ep.unpersist()
-    return out
 
 
 @register(

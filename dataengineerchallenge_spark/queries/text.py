@@ -2168,12 +2168,14 @@ def _textrank_oracle(iters: int = 5) -> str:
     chain = ",\n    ".join(steps)
     return f"""
     WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-    tok AS (SELECT doc_id, unnest(range(1, len(ws) + 1)) AS i, ws FROM t),
+    tok AS (
+      SELECT doc_id, generate_subscripts(ws, 1) AS i, unnest(ws) AS w FROM t
+    ),
     dc AS (
-      SELECT a.ws[a.i] AS src, b.ws[b.i] AS dst, count(*) AS c
+      SELECT a.w AS src, b.w AS dst, count(*) AS c
       FROM tok a JOIN tok b
         ON a.doc_id = b.doc_id AND b.i - a.i BETWEEN 1 AND 2
-       AND a.ws[a.i] != b.ws[b.i]
+       AND a.w != b.w
       GROUP BY 1, 2
     ),
     e AS (

@@ -18,20 +18,16 @@ their query lists, with ``SPARK_GRAFT_SF_DIR=$SF01`` set and ``$SF01`` /
         part_copurchase_pagerank_staged purchase_hits_staged \\
         semantic_dedup_corpus part_pair_affinity doc_lang_id
 
-    # bench_explode_ab.py -> BENCH_explode.json
-    python tools/ab.py --conf spark.graft.graph.explodeMembers=true,false \\
-        part_copurchase_triangles part_copurchase_triangles_staged \\
-        copurchase_clustering_coefficient copurchase_truss copurchase_coreness
-
     # bench_servestage_ab.py -> BENCH_servestage.json
     python tools/ab.py --conf spark.graft.vectors.ckptServeLuts=true,false \\
         ivf_pq_residual_serve_fresh_topk ivf_pq_trained_rerank_topk \\
         ivf_pq_serve_filtered_topk ivf_pq_serve_fresh_topk \\
         ivf_pq_serve_rerank_topk ivf_pq_serve_topk
 
-The dials of bench_narrow_ab.py, bench_keyed_ab.py and
-bench_ckptindex_ab.py are gone (their default layouts are the only
-path). Their query lists, to time against another conf KEY:
+The dials of bench_narrow_ab.py, bench_keyed_ab.py,
+bench_ckptindex_ab.py and bench_explode_ab.py are gone (their default
+layouts are the only path). Their query lists, to time against another
+conf KEY:
 
     # bench_narrow_ab.py -> BENCH_narrow.json
     python tools/ab.py --conf KEY=A,B \\
@@ -48,6 +44,11 @@ path). Their query lists, to time against another conf KEY:
         purchase_hits_staged copurchase_components_staged \\
         copurchase_spectral_bipartition@$SF001 \\
         copurchase_spectral_profile@$SF001 copurchase_spectral_quadrants@$SF001
+
+    # bench_explode_ab.py -> BENCH_explode.json
+    python tools/ab.py --conf KEY=A,B \\
+        part_copurchase_triangles part_copurchase_triangles_staged \\
+        copurchase_clustering_coefficient copurchase_truss copurchase_coreness
 
     # bench_ckptindex_ab.py -> BENCH_ckptindex.json
     python tools/ab.py --conf KEY=A,B \\

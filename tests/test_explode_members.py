@@ -1,20 +1,14 @@
-"""Round-20 session-4 optimization pins for the triangle-family
-duplicated-subtree fix (operators/graph.py:_explode_members):
-
-- triangle_counts and truss return IDENTICAL rows with the dial on
-  (explode(array(...)) single-pass member/side emission, the default)
-  and off (legacy 3-way UNION that re-ran the wedge + closing joins
-  once per branch);
-- the default path carries a Generate (explode) node where the legacy
-  path carried a 3-branch Union — pinning that the plan-shape claim in
-  OPTIMIZATION_r20.md stays true.
+"""Pins for the triangle-family single-pass member/side emission
+(operators/graph.py: triangle_counts and truss emit a triangle's three
+corners/sides through one ``explode(array(...))`` over the enumeration
+join; the legacy 3-way UNION, which re-ran the wedge + closing joins
+once per branch, is gone). The exact values below are the ones both
+forms produced.
 """
 
 from __future__ import annotations
 
 from dataengineerchallenge_spark.operators.graph import triangle_counts, truss
-
-FLAG = "spark.graft.graph.explodeMembers"
 
 # two overlapping triangles (1,2,3) and (2,3,4) plus a pendant edge —
 # nodes 2 and 3 sit in both triangles, 5 in none
@@ -39,45 +33,22 @@ def _truss_rows(spark):
 
 
 def test_triangle_counts_same_under_both_dials(spark):
-    on = _counts(spark)
-    assert on == EXPECTED_TRIANGLES
-    spark.conf.set(FLAG, "false")
-    try:
-        off = _counts(spark)
-    finally:
-        spark.conf.unset(FLAG)
-    assert on == off
+    assert _counts(spark) == EXPECTED_TRIANGLES
 
 
 def test_truss_same_under_both_dials(spark):
-    on = _truss_rows(spark)
-    spark.conf.set(FLAG, "false")
-    try:
-        off = _truss_rows(spark)
-    finally:
-        spark.conf.unset(FLAG)
-    assert on == off
     # k=4 truss of the fixture: the two overlapping triangles survive
     # only where every edge has support >= 2 — the shared edge (2,3)
     # has support 2; all other triangle edges have support 1, so a
     # 4-truss is empty here. Pin the exact converged output so a future
     # rewrite cannot silently change the fixpoint.
-    assert on == []
+    assert _truss_rows(spark) == []
 
 
 def test_truss_nonempty_fixpoint_same_under_both_dials(spark):
     # k=3 keeps every edge whose support >= 1: both triangles survive,
     # the pendant edge (4,5) dies — a NON-empty fixpoint exercising the
     # explode side-emission with surviving rows
-    def rows():
-        return sorted(tuple(r) for r in truss(_edges_df(spark), k=3, iters=3).collect())
-
-    on = rows()
-    spark.conf.set(FLAG, "false")
-    try:
-        off = rows()
-    finally:
-        spark.conf.unset(FLAG)
-    assert on == off
-    kept = {(a, b) for a, b, _s in on}
-    assert kept == {(1, 2), (1, 3), (2, 3), (2, 4), (3, 4)}
+    rows = sorted(tuple(r) for r in truss(_edges_df(spark), k=3, iters=3).collect())
+    assert {(a, b) for a, b, _s in rows} == {(1, 2), (1, 3), (2, 3), (2, 4), (3, 4)}
+    assert rows == [(1, 2, 1), (1, 3, 1), (2, 3, 2), (2, 4, 1), (3, 4, 1)]
